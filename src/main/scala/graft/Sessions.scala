@@ -17,11 +17,16 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       // allow the planner to pick a SHUFFLED HASH join when one side's
-      // per-partition build fits (optimization guide §3.1/§9): sort-merge
-      // pays two full sorts that a hash build skips; at 100 TB the same
-      // condition holds per partition (AQE's skew split keeps build
-      // sides bounded), and SMJ remains the fallback whenever the size
-      // conditions fail — a strategy choice, never a semantics change.
+      // ESTIMATED size fits a per-partition hash map (below
+      // autoBroadcastJoinThreshold × shuffle partitions and 3× smaller
+      // than the other side): sort-merge pays two full sorts that a
+      // hash build skips. The trade-off is memory safety: the hash
+      // build side does not spill, so a partition whose build side
+      // outgrows executor memory (an under-estimated size, or a skewed
+      // key AQE's skew split does not break up) fails with OOM where a
+      // sort-merge join would have spilled and finished. SMJ is chosen
+      // only when the size test fails at planning time; it is not a
+      // runtime fallback. A strategy choice, never a semantics change.
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -130,6 +130,22 @@ object Ast {
   final case class InSubquery(e: Expr, query: Query, negated: Boolean) extends Expr
   final case class ExistsExpr(query: Query, negated: Boolean) extends Expr
 
+  /** Direct sub-expressions of `e`. A subquery body is a query, not an
+    * operand, so it is not entered; an IN-subquery's lhs is. */
+  def operands(e: Expr): Seq[Expr] = e match {
+    case Binary(_, l, r) => Seq(l, r)
+    case Unary(_, o) => Seq(o)
+    case FnCall(_, args) => args
+    case CaseExpr(s, bs, el) => s.toSeq ++ bs.flatMap { case (a, b) => Seq(a, b) } ++ el
+    case BetweenExpr(a, lo, hi, _) => Seq(a, lo, hi)
+    case InList(a, items, _) => a +: items
+    case TupleLit(xs) => xs
+    case ArrayLit(xs) => xs
+    case MapLit(es) => es.flatMap { case (k, v) => Seq(k, v) }
+    case InSubquery(a, _, _) => Seq(a)
+    case _ => Nil
+  }
+
   /** Visit every table-source name reachable from `q` — FROM/JOIN sources
     * plus subqueries in every expression position (WHERE, HAVING, select
     * list, JOIN conditions, GROUP BY, ORDER BY, DISTINCT ON, CTEs). One
@@ -145,18 +161,7 @@ object Ast {
       case SubqueryExpr(sub) => walkQuery(sub)
       case InSubquery(a, sub, _) => walkExpr(a); walkQuery(sub)
       case ExistsExpr(sub, _) => walkQuery(sub)
-      case Binary(_, l, r) => walkExpr(l); walkExpr(r)
-      case Unary(_, o) => walkExpr(o)
-      case FnCall(_, args) => args.foreach(walkExpr)
-      case CaseExpr(s, bs, el) =>
-        s.foreach(walkExpr); bs.foreach { case (a, b) => walkExpr(a); walkExpr(b) }
-        el.foreach(walkExpr)
-      case BetweenExpr(a, lo, hi, _) => walkExpr(a); walkExpr(lo); walkExpr(hi)
-      case InList(a, items, _) => walkExpr(a); items.foreach(walkExpr)
-      case TupleLit(xs) => xs.foreach(walkExpr)
-      case ArrayLit(xs) => xs.foreach(walkExpr)
-      case MapLit(es) => es.foreach { case (k, v) => walkExpr(k); walkExpr(v) }
-      case _ => ()
+      case other => operands(other).foreach(walkExpr)
     }
     def walkQuery(sub: Query): Unit = sub match {
       case SetOpQuery(_, a, b) => walkQuery(a); walkQuery(b)

@@ -108,12 +108,15 @@ object Dedup {
     *  - the sorted verify arrays ARE the rows — no
     *    `sort_array(collect_list(h))` aggregate, no id-exchange for it.
     * NULL text emits no row (explode-of-null semantics of the old
-    * stream); empty text keeps its single empty-shingle hash. */
+    * stream); empty text keeps its single empty-shingle hash. The NULL
+    * test runs on the TEXT, below the projection: the kernel returns
+    * NULL only for NULL text, and a filter on the projected array would
+    * be pushed down as a second kernel call per row. */
   private[graft] def shingleSetStream(docs: DataFrame, idCol: String,
       textCol: String, n: Int): DataFrame =
-    docs.select(col(idCol).as("id"),
+    docs.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"),
         graft.functions.ShingleHashes.distinctSorted(col(textCol), n).as("__hs"))
-      .filter(col("__hs").isNotNull)
       .select(col("id"), col("__hs"), size(col("__hs")).cast("long").as("__sz"))
 
   /** MinHash signature as k wide columns via the shingle stream + k

@@ -133,6 +133,27 @@ class Round4Spec extends AnyFunSuite with BeforeAndAfterAll {
     val want = o.join(hi, col("o_custkey") === col("k") &&
       col("o_orderstatus") === col("s"), "left_semi").count()
     assert(got == want)
+
+    // the same table on both sides of an equality-correlated EXISTS: an
+    // outer reference that silently bound to the inner `orders` would
+    // turn the correlation into `k = k` and keep every row
+    val topKeys = o.filter(col("o_totalprice") > 400000)
+      .select(col("o_custkey").as("k")).distinct()
+    val semi = o.join(topKeys, col("o_custkey") === col("k"), "left_semi").count()
+    val anti = o.join(topKeys, col("o_custkey") === col("k"), "left_anti").count()
+    assert(semi > 0 && anti > 0, "fixture must split orders both ways")
+    val asO2 = "from orders as o2 where o2.o_custkey = orders.o_custkey " +
+      "and o2.o_totalprice > 400000"
+    val unaliased = "from orders where o_custkey = o1.o_custkey " +
+      "and o_totalprice > 400000"
+    for ((outer, body) <- Seq("orders" -> asO2, "orders as o1" -> unaliased)) {
+      def n(where: String): Long =
+        rows(s"select count(*) as n from $outer where $where").head.getLong(0)
+      assert(n(s"exists (select 1 $body)") == semi, s"EXISTS, $outer")
+      assert(n(s"not exists (select 1 $body)") == anti, s"NOT EXISTS, $outer")
+      assert(n(s"o_orderkey < 0 or exists (select 1 $body)") == semi,
+        s"EXISTS under OR, $outer")
+    }
   }
 
   test("correlated IN with GROUP BY + HAVING body (aggregate value set)") {

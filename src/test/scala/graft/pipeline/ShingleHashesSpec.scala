@@ -104,6 +104,20 @@ class ShingleHashesSpec extends AnyFunSuite {
     assert(rows.head.getLong(2) == 1L)
   }
 
+  test("shingleSetStream runs the shingle kernel once per row") {
+    // a NULL filter on the projected array is pushed below the
+    // projection as a second kernel call; filtering the text keeps the
+    // optimized plan at one call. The input is range-derived: a local
+    // Seq would be constant-folded away
+    val df = spark.range(1, 3).select(col("id"),
+      when(col("id") === 2, lit("a b c d")).as("text"))
+    val out = Dedup.shingleSetStream(df, "id", "text", 3)
+    val plan = out.queryExecution.optimizedPlan.toString
+    val calls = "shingle_hashes_distinct\\(".r.findAllMatchIn(plan).size
+    assert(calls == 1, s"expected one kernel call, got $calls in:\n$plan")
+    assert(out.collect().map(_.getLong(0)).toSeq == Seq(2L))
+  }
+
   test("distinctSorted equals sort_array(array_distinct(shingle_hashes))") {
     val viaBuiltins = docsDf.select(col("id"),
       sort_array(array_distinct(
