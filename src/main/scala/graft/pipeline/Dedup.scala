@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -510,8 +510,7 @@ object Dedup {
       * tracks the pieces, so bench/verify teardown releases an
       * un-released index. */
     def release(blocking: Boolean = false): Unit =
-      cachedPieces.foreach(f =>
-        try f.unpersist(blocking) catch { case _: Throwable => () })
+      cachedPieces.foreach(PipelineCaches.unpersist(_, blocking))
   }
 
   /** Build the [[CorpusShingleIndex]] for `corpus` — EAGER: each frame
@@ -520,7 +519,22 @@ object Dedup {
     * index-read-only (the plan pin in Round13PipelineSpec: a verdict
     * plan scans only batch-side files). The intermediate (id, hash)
     * stream is dropped after the build — only the four index frames
-    * stay cached. */
+    * stay cached.
+    *
+    * The index is a SNAPSHOT of `corpus` as of this call. `fps` and
+    * `arrs` sit on a path-free leaf over their own RDDs
+    * (`GraftSqlBridge.snapshot`), and `dfreq` / `prefix` derive from
+    * `arrs`, so no index plan names the corpus's files. That matters
+    * when the corpus is a table later written to: every file write
+    * (an engine INSERT, a parquet append) ends in
+    * `CacheManager.recacheByPath` on the written directory, which clears
+    * EVERY cached plan reading it — an index planned straight off the
+    * corpus scan would silently lose all four caches and re-shingle the
+    * whole grown corpus on its next read. The snapshot keeps its RDD
+    * lineage, pinned to the files listed at build time: a released or
+    * lost cache recomputes the build-time rows (while those files
+    * exist — a compaction deletes them; `writeIndexTables` /
+    * `loadCorpusShingleIndex` is the durable form). */
   def buildCorpusShingleIndex(corpus: DataFrame, idCol: String,
       textCol: String, shingleN: Int = 3, thresholdNum: Int = 1,
       thresholdDen: Int = 2, maxPosting: Int = 4096): CorpusShingleIndex = {
@@ -528,17 +542,17 @@ object Dedup {
       "threshold must satisfy 0 < num/den <= 1")
     def persistTracked(df: DataFrame): DataFrame =
       PipelineCaches.track(df.persist(StorageLevel.MEMORY_AND_DISK))
-    val fps = persistTracked(corpus
+    val fps = persistTracked(GraftSqlBridge.snapshot(corpus
       .select(graft.pipeline.TextOps.fingerprint(col(textCol)).as("__fp"))
-      .distinct())
+      .distinct()))
     // Round 17: the verify ARRAYS are computed per row (one codegen'd
     // projection — see shingleSetStream) and double as the base frame
     // the exploded hash stream derives from, so the build pays no
     // per-doc dedup aggregate, no per-doc size window and no
     // sort_array(collect_list) aggregate, and the pinned h-exchange
     // carries only distinct (id, h, __sz) rows (guide §2.3/§2.4).
-    val arrs = persistTracked(
-      shingleSetStream(corpus, idCol, textCol, shingleN))
+    val arrs = persistTracked(GraftSqlBridge.snapshot(
+      shingleSetStream(corpus, idCol, textCol, shingleN)))
     // build-scoped: consumed by the derived frames below, then dropped —
     // the same pinned-exchange + persist discipline as
     // ngramJaccardPairs, but scoped to the build instead of the session
@@ -568,7 +582,9 @@ object Dedup {
     // one-action qp93 on the same text volume). Round 16: the cap-audit
     // count (ADVICE r12 #3 "no silent caps") rides the SAME action as a
     // tagged fifth branch — one row per dropped bucket — instead of its
-    // own follow-up job.
+    // own follow-up job. The only work ahead of it is what the `fps`
+    // snapshot planned: under AQE, the fingerprint distinct's shuffle
+    // stage (`arrs` has no exchange, so its snapshot runs nothing).
     val dropped = materializeAndCountDropped(Seq(fps, dfreq, prefix, arrs),
       overCapBuckets(rawPrefix, Seq(col("h")), maxPosting))
     if (dropped > 0)
@@ -610,7 +626,14 @@ object Dedup {
     *
     * Chained appends stack lazy unions of cached pieces — fine for the
     * batches-per-rebuild cadence; hundreds of appends without a rebuild
-    * would want the bucketed-table deployment (SCALE.md §Dedup). */
+    * would want the bucketed-table deployment (SCALE.md §Dedup).
+    *
+    * O(|batch|) holds because the built index is a path-free snapshot
+    * (see [[buildCorpusShingleIndex]]): INSERTing the batch into the
+    * corpus TABLE afterwards — the usual next step — triggers Spark's
+    * `recacheByPath` on that table's directory, which no index piece
+    * reads, so the next call still finds every piece cached. The
+    * deltas read only the batch and the index. */
   def appendToCorpusShingleIndex(index: CorpusShingleIndex, batch: DataFrame,
       idCol: String, textCol: String): CorpusShingleIndex =
     // append-only: the batch working set is dead once the deltas are
@@ -628,7 +651,14 @@ object Dedup {
     * it; at fixture scale that one batch pipeline is ~2 s of the qp103
     * entry). Returns the lazy verdict frame plus the grown index; the
     * append's eager materialization also fills the shared caches the
-    * verdict frame reads. */
+    * verdict frame reads.
+    *
+    * The verdicts are judged against the index snapshot (build-time
+    * corpus plus appended batches), not against the corpus table's
+    * current files: writing the batch into that table — even by an
+    * INSERT that reads this verdict frame — neither invalidates the
+    * index caches (no index plan reads the table's path, so
+    * `recacheByPath` passes them by) nor changes a verdict. */
   def classifyAndAppend(index: CorpusShingleIndex, batch: DataFrame,
       idCol: String, textCol: String): (DataFrame, CorpusShingleIndex) = {
     val in = batchInput(index, batch, idCol, textCol)
@@ -1046,12 +1076,7 @@ object Dedup {
   def releaseCcCache(blocking: Boolean = false): Unit = {
     val (_, cached) = ccCache.get()
     ccCache.set(("", null))
-    if (cached != null && !cached.sparkSession.sparkContext.isStopped)
-      cached.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking)
-        case _ => () // driver-side union-find result: never persisted
-      }
+    if (cached != null) PipelineCaches.unpersist(cached, blocking)
   }
 
   /** Connected components over an undirected pair list (id_a, id_b):

@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Lifecycle registry for DataFrames a pipeline operator persists but
   * cannot unpersist before returning (the returned lazy frame's lineage
@@ -9,7 +11,8 @@ import org.apache.spark.sql.DataFrame
   * by `Engine.releaseCaches`). Callers that run an action over a
   * pipeline result release these through `Engines.releaseAll()`, which
   * drains both registries; a frame re-used after release stays correct
-  * (Spark recomputes an unpersisted plan).
+  * (Spark recomputes an unpersisted plan) — except a checkpointed one,
+  * whose dropped blocks have no lineage to recompute from.
   *
   * VERDICT r11 #1: the qp63 `(id, hash)` persist had no release path,
   * so every invocation pinned a corpus-shaped MEMORY_AND_DISK copy for
@@ -25,6 +28,22 @@ object PipelineCaches {
     frames += df; df
   }
 
+  /** Drop `df`'s cached blocks, best-effort: its CacheManager entry and,
+    * when its plan is a bare `LogicalRDD` over a persisted RDD (a
+    * `localCheckpoint`), that RDD too — a checkpoint is not a
+    * CacheManager entry, so `df.unpersist` alone leaves its blocks
+    * pinned. Every release path goes through here. */
+  private[graft] def unpersist(df: DataFrame, blocking: Boolean): Unit =
+    if (!df.sparkSession.sparkContext.isStopped)
+      try {
+        df.unpersist(blocking)
+        df.queryExecution.analyzed match {
+          case lr: LogicalRDD if lr.rdd.getStorageLevel != StorageLevel.NONE =>
+            lr.rdd.unpersist(blocking)
+          case _ => ()
+        }
+      } catch { case _: Throwable => () }
+
   /** Unpersist every tracked frame — ACROSS ALL SESSIONS. This is the
     * single-driver teardown (bench/verify run one session per process
     * and call this between entries); a process hosting CONCURRENT
@@ -36,7 +55,7 @@ object PipelineCaches {
     * bench uses it so one entry's cached residue can never occupy the
     * unified memory region while the next entry is timed. */
   def releaseAll(blocking: Boolean = false): Unit = synchronized {
-    frames.foreach(f => try f.unpersist(blocking) catch { case _: Throwable => () })
+    frames.foreach(unpersist(_, blocking))
     frames.clear()
   }
 
@@ -71,7 +90,7 @@ object PipelineCaches {
     try body
     finally synchronized {
       val (added, kept) = frames.partition(f => !before.contains(f))
-      added.foreach(f => try f.unpersist() catch { case _: Throwable => () })
+      added.foreach(unpersist(_, blocking = false))
       frames.clear()
       frames ++= kept
     }
@@ -83,7 +102,7 @@ object PipelineCaches {
   def release(session: org.apache.spark.sql.SparkSession,
       blocking: Boolean = false): Unit = synchronized {
     val (mine, rest) = frames.partition(_.sparkSession eq session)
-    mine.foreach(f => try f.unpersist(blocking) catch { case _: Throwable => () })
+    mine.foreach(unpersist(_, blocking))
     frames.clear()
     frames ++= rest
   }

@@ -59,7 +59,7 @@ class Round13PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("indexed incremental dedup: a verdict call scans only batch files") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
@@ -79,6 +79,9 @@ class Round13PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = nodes(verdicts.queryExecution.executedPlan)
     val fileScans = all.collect { case f: FileSourceScanExec => f }
     val cacheScans = all.collect { case c: InMemoryTableScanExec => c }
+    // index frames: cache scans plus scans of a path-free snapshot leaf
+    // (a LogicalRDD plans as an RDDScanExec when it is read uncached)
+    val indexScans = cacheScans.size + all.count(_.isInstanceOf[RDDScanExec])
     // every corpus-side input is a cached index frame; the only parquet
     // scans left are the batch side's (exact-tier fp, shingle stream,
     // final id assembly) — a corpus rebuild would put the corpus filter
@@ -86,8 +89,96 @@ class Round13PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fileScans.size <= 3, s"unexpected live scan count ${fileScans.size}")
     fileScans.foreach(f => assert(!f.toString.contains("NOT ((doc_id"),
       s"verdict plan re-scans the corpus: $f"))
-    assert(cacheScans.size >= 3,
-      s"verdict plan lost the cached index frames (${cacheScans.size} cache scans)")
+    assert(indexScans >= 3,
+      s"verdict plan lost the cached index frames ($indexScans index scans)")
+    // nor may an index cache be planned off the corpus files: a cache
+    // whose plan still scans them is the one a write to those files
+    // invalidates (CacheManager.recacheByPath), re-shingling the corpus
+    cacheScans.flatMap(c => nodes(c.relation.cachedPlan))
+      .collect { case f: FileSourceScanExec => f }
+      .foreach(f => assert(!f.toString.contains("NOT ((doc_id"),
+        s"an index cache is planned off the corpus scan: $f"))
+    graft.queries.Engines.releaseAll(blocking = true)
+  }
+
+  test("index release: persisted RDDs return to the pre-build set") {
+    val sc = spark.sparkContext
+    // a range-sourced corpus renamed back to `id` by the index: the
+    // optimizer drops that alias, so the executed plan's output ordering
+    // names an attribute the snapshot's output does not have
+    val corpus = spark.range(200).selectExpr("id as doc_id",
+      "concat('shared words for every copy ', id % 7) as text")
+    val before = sc.getPersistentRDDs.keySet
+    val idx = Dedup.buildCorpusShingleIndex(corpus, "doc_id", "text",
+      shingleN = 3, thresholdNum = 2, thresholdDen = 5)
+    val (verdicts, grown) = Dedup.classifyAndAppend(idx,
+      docs.filter(col("doc_id") % 5 === 0), "doc_id", "text")
+    verdicts.collect()
+    assert(sc.getPersistentRDDs.keySet != before, "the build persisted nothing")
+    grown.release(blocking = true)
+    PipelineCaches.releaseAll(blocking = true)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"release left ${left.size} persisted RDD(s)")
+    // a checkpointed frame holds its blocks in an RDD, not a CacheManager
+    // entry: the registry must drop that RDD too
+    PipelineCaches.track(docs.select(col("doc_id")).localCheckpoint(eager = true))
+    assert(sc.getPersistentRDDs.keySet != before, "the checkpoint persisted nothing")
+    PipelineCaches.releaseAll(blocking = true)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "releaseAll left a checkpoint's blocks persisted")
+  }
+
+  test("index over an engine table: an INSERT into it keeps the index cached") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val engine = graft.engine.Engine.forTestdata(spark, dir)
+    val tablePath = engine.catalog.tablePath("corpus")
+    engine.execute("create table corpus (doc_id Int64, text String)")
+    engine.execute("insert into corpus select doc_id, text from documents where doc_id % 5 <> 0")
+    val idx = Dedup.buildCorpusShingleIndex(
+      engine.execute("select doc_id, text from corpus"), "doc_id", "text",
+      shingleN = 3, thresholdNum = 2, thresholdDen = 5)
+    // the ingestion loop: classify + append a batch, act on its verdicts,
+    // then INSERT the batch into the table the index was built from
+    val b1 = docs.filter(col("doc_id") % 10 === 0)
+    val b2 = docs.filter(col("doc_id") % 10 === 5)
+    val (v1, idx1) = Dedup.classifyAndAppend(idx, b1, "doc_id", "text")
+    v1.collect()
+    val buildTime = docs.filter(col("doc_id") % 5 =!= 0).unionAll(b1)
+    def verdicts(df: DataFrame): Map[Long, String] =
+      df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val want = verdicts(Dedup.incrementalNearDup(buildTime, b2, "doc_id", "text",
+      shingleN = 3, thresholdNum = 2, thresholdDen = 5))
+    // the same INSERT also plants a copy of a batch-2 doc the snapshot
+    // does not hold: an index that re-read the table would call it exact
+    val planted = want.collectFirst { case (id, "new") => id }
+      .getOrElse(fail("batch 2 has no 'new' document to plant"))
+    engine.execute("insert into corpus select doc_id, text from documents " +
+      "where doc_id % 10 = 0 union all select doc_id + 1000000, text " +
+      s"from documents where doc_id = $planted")
+    val pieces = Seq("fps" -> idx1.fps, "arrs" -> idx1.arrs,
+      "dfreq" -> idx1.dfreq, "prefix" -> idx1.prefix)
+    pieces.foreach { case (name, df) =>
+      val roots = df.queryExecution.analyzed.collect {
+        case l: LogicalRelation => l.relation
+      }.collect { case h: HadoopFsRelation => h.location.rootPaths }.flatten
+      assert(!roots.exists(_.toUri.getPath.startsWith(tablePath)),
+        s"index $name still plans a scan of the corpus table: ${roots.mkString(", ")}")
+    }
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // after an append, prefix is a union over cached pieces: check the
+    // built frames by name, then every piece of the grown index
+    (Seq("dfreq" -> idx.dfreq, "prefix" -> idx.prefix) ++
+        idx1.cachedPieces.zipWithIndex.map { case (df, i) => s"piece $i" -> df })
+      .foreach { case (name, df) =>
+        val cached = cacheManager.lookupCachedData(
+          df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+        assert(cached.exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded),
+          s"the INSERT dropped the cached buffers of index $name")
+      }
+    val (v2, idx2) = Dedup.classifyAndAppend(idx1, b2, "doc_id", "text")
+    assert(verdicts(v2) == want)
+    idx2.release(blocking = true)
     graft.queries.Engines.releaseAll(blocking = true)
   }
 
