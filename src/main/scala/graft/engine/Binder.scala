@@ -42,7 +42,7 @@ final class Binder(
     Scope(None, df, cols, hidden = true)
   final case class Rel(df: DataFrame, scopes: Seq[Scope])
 
-  /** Mutable binding state: scalar subqueries cross-join onto `rel` as
+  /** Mutable binding state: scalar subqueries are placed onto `rel` as
     * they are encountered inside expressions. */
   private final class Ctx(
       var rel: Rel,
@@ -167,7 +167,7 @@ final class Binder(
 
     // ---- projection ----
     // expand wildcards against the scopes BEFORE binding scalar-adding
-    // expressions (a later cross-joined scalar column must not leak into *)
+    // expressions (a later placed scalar column must not leak into *)
     val preScopes = ctx.rel.scopes
     case class Out(col: Column, name: String)
     val outs: Seq[Out] = qb.selectList.zipWithIndex.flatMap {
@@ -513,10 +513,10 @@ final class Binder(
         Rel(df, keyScope +: visible)
       case OnCondition(condExpr) =>
         val bothScopes = left.scopes ++ right.scopes
-        // scalar subqueries in the condition broadcast-cross-join their
-        // 1-row value onto the LEFT side while binding (bindScalarSubquery
-        // mutates condCtx.rel), so join from condCtx.rel.df afterwards;
-        // correlation against the right side is rejected at orientation
+        // scalar subqueries in the condition are placed onto the LEFT
+        // side while binding (bindScalarSubquery mutates condCtx.rel), so
+        // join from condCtx.rel.df afterwards; correlation against the
+        // right side is rejected by outerRefs
         jc.joinType match {
           case "asof" => bindAsOf(left, right, condExpr, ctes, leftOuter = false)
           case "asof_left" => bindAsOf(left, right, condExpr, ctes, leftOuter = true)
@@ -740,10 +740,10 @@ final class Binder(
     val leftOrdCol = bindExpr(lOrd, lCtx).as(ordName)
     val rightKeyCols = eqPairs.zip(keyNames).map { case ((_, re), kn) => bindExpr(re, rCtx).as(kn) }
     val rightOrdCol = bindExpr(rOrd, rCtx).as(ordName)
-    // a scalar subquery in a key/ordering expression cross-joins its
-    // (broadcast, 1-row) value onto the side's frame during binding —
-    // select from the POST-BINDING frames; the projection below keeps
-    // only the named columns, so the scalar rider never leaks
+    // a scalar subquery in a key/ordering expression is placed onto the
+    // side's frame during binding — select from the POST-BINDING
+    // frames; the projection below keeps only the named columns, so the
+    // scalar rider never leaks
     val leftPrep = lCtx.rel.df.select(
       leftCols.map { case (s, c, u) => s.column(c).as(u) } ++ leftKeyCols :+ leftOrdCol: _*)
       .withColumn(isLeftName, lit(true))
@@ -808,9 +808,9 @@ final class Binder(
     // joins its own scalar-subquery riders (a second, independent
     // instance) onto ctx2's frame, and the window below must see them
     val ordCol = bindExpr(rOrd, ctx2)
-    // scalar subqueries in the condition cross-join their (1-row
-    // broadcast) values onto ctx2's frame during binding — join FROM
-    // that frame and drop the fresh-named riders after the pick
+    // scalar subqueries in the condition are placed onto ctx2's frame
+    // during binding — join FROM that frame and drop the fresh-named
+    // riders after the pick
     val srcDf = ctx2.rel.df
     val riders = srcDf.columns.toSeq.diff(leftDf.columns.toSeq)
     val joined = srcDf.join(right.df, cond, if (leftOuter) "left" else "inner")
@@ -2836,7 +2836,8 @@ final class Binder(
     } else qb.having.map(substituteAliases(_, qb.selectList)) match {
       case Some(h) =>
         val hn = fresh("hv")
-        correlatedAgg(innerCtx, keyPairs, Seq(h -> hn), ctx).where(col(hn))
+        val (body, Seq(hc)) = correlatedAgg(innerCtx, keyPairs, Seq(h), ctx)
+        body.select(hc.as(hn)).where(col(hn))
       case None => correlatedRows(innerCtx, keyPairs, Nil, ctx)
     }
 
@@ -2851,8 +2852,15 @@ final class Binder(
     * subquery column is placed, which would orphan the qualifier. */
   private def outerRefs(cols: Seq[Column], ctx: Ctx): Seq[Column] = {
     val names = cols.map(_ => fresh("okey"))
-    ctx.rel = Rel(ctx.rel.df.select(
-      col("*") +: cols.zip(names).map { case (c, n) => c.as(n) }: _*), ctx.rel.scopes)
+    val df =
+      try ctx.rel.df.select(col("*") +: cols.zip(names).map { case (c, n) => c.as(n) }: _*)
+      catch {
+        // in a JOIN ON condition the outer frame is the LEFT side only
+        case _: org.apache.spark.sql.AnalysisException =>
+          err("correlated subquery here may only reference columns of the " +
+            "current (left) relation — move it to WHERE or rewrite the join")
+      }
+    ctx.rel = Rel(df, ctx.rel.scopes)
     names.map(n => col(n).outer())
   }
 
@@ -2888,23 +2896,29 @@ final class Binder(
     * aggregate row), and it stays lazy under the pending outer
     * reference where `groupBy` does not. The aggregate arguments are
     * projected under fresh names below the filter, and each output
-    * expression binds over those names. */
+    * expression binds over those names. Returns the filtered rows and
+    * the bound outputs: the caller's `select` of them is the aggregate.
+    * A struct of outputs must be built in that same `select` — a
+    * projection on top of it makes Catalyst add a domain join. */
   private def correlatedAgg(innerCtx: Ctx, keyPairs: Seq[(Expr, Expr)],
-      outputs: Seq[(Expr, String)], ctx: Ctx): DataFrame = {
-    val calls = outputs.flatMap(o => collectAggs(o._1)).distinct.map { fc =>
+      outputs: Seq[Expr], ctx: Ctx): (DataFrame, Seq[Column]) = {
+    val calls = outputs.flatMap(collectAggs).distinct.map { fc =>
       val star = fc.args.isEmpty || fc.args.exists(_.isInstanceOf[Wildcard])
       // constant arguments (a quantile level, …) stay literal
       val args = if (star) Nil else fc.args.map { a =>
         if (idents(a).isEmpty) Left(bindExpr(a, innerCtx))
         else Right((bindExpr(a, innerCtx), fresh("aarg")))
       }
+      val agg = FunctionRegistry.bindAgg(fc.name, args.map(_.fold(identity, a => col(a._2))), star)
+      // over an empty set only the count family is non-NULL; Catalyst
+      // fills an unmatched key from each aggregate's own empty value
+      // instead (`[]` for groupArray)
       (args.collect { case Right((c, n)) => c.as(n) },
-        (fc: Expr) -> FunctionRegistry.bindAgg(fc.name,
-          args.map(_.fold(identity, a => col(a._2))), star))
+        (fc: Expr) -> (if (isCountFamily(fc.name)) agg else when(count(lit(1)) > 0, agg)))
     }
     val body = correlatedRows(innerCtx, keyPairs, calls.flatMap(_._1), ctx)
     val aggCtx = new Ctx(innerCtx.rel, None, innerCtx.ctes, subst = calls.map(_._2).toMap)
-    body.select(outputs.map { case (e, n) => bindExpr(e, aggCtx).as(n) }: _*)
+    (body, outputs.map(bindExpr(_, aggCtx)))
   }
 
   /** A subquery body's FROM/JOIN relation, bound over `ctes`. */
@@ -3315,12 +3329,10 @@ final class Binder(
     * `n`, filtered on its correlation:
     *  - ungrouped aggregate body: [[correlatedAgg]] — ONE value per outer
     *    row, even over an empty set, dropped when HAVING fails;
-    *  - plain body: the inner rows' values; GROUP BY body: the values of
-    *    the HAVING-surviving groups of (correlation keys ∪ GROUP BY keys).
-    * Both carry the correlation keys as lifted columns, so DISTINCT ON
-    * and LIMIT / OFFSET [WITH TIES] shape each outer row's set with
-    * windows partitioned by those keys (never a global sort). Plain
-    * DISTINCT needs nothing: IN is set membership. */
+    *  - any other body: [[keyedRows]], so DISTINCT ON and LIMIT / OFFSET
+    *    [WITH TIES] shape each outer row's set with windows partitioned
+    *    by the lifted correlation keys (never a global sort). Plain
+    *    DISTINCT needs nothing: IN is set membership. */
   private def inValues(qb: QueryBody, innerRel: Rel, local: Seq[Expr],
       correlated: Seq[Expr], ctx: Ctx, bodyCtes: Map[String, DataFrame],
       n: String): DataFrame = {
@@ -3328,93 +3340,100 @@ final class Binder(
     val innerCtx = new Ctx(innerRel, None, bodyCtes)
     applyLocal(local, innerCtx, "correlated IN subquery")
     val selectExpr = qb.selectList.head.expr
-    val aggInSelect = collectAggs(selectExpr).distinct
-    if (qb.groupBy.isEmpty && (qb.having.isDefined || aggInSelect.nonEmpty)) {
+    if (qb.groupBy.isEmpty && (qb.having.isDefined || collectAggs(selectExpr).nonEmpty)) {
       val hn = fresh("hv")
       val having = qb.having.map(substituteAliases(_, qb.selectList))
-      val agg = correlatedAgg(innerCtx, keyPairs, (selectExpr -> n) +: having.map(_ -> hn).toSeq, ctx)
-      return if (having.isEmpty) agg else agg.where(col(hn)).select(col(n))
+      val (body, v +: h) = correlatedAgg(innerCtx, keyPairs, selectExpr +: having.toSeq, ctx)
+      return if (h.isEmpty) body.select(v.as(n))
+        else body.select(v.as(n), h.head.as(hn)).where(col(hn)).select(col(n))
     }
-    val onKeys = qb.distinct.toSeq.flatten
     if (qb.limit.isDefined && qb.distinct.contains(Nil))
       err("correlated IN with LIMIT does not combine with DISTINCT")
-    val shaped = qb.limit.isDefined || onKeys.nonEmpty
-    if (shaped && qb.orderBy.isEmpty)
+    if ((qb.limit.isDefined || qb.distinct.exists(_.nonEmpty)) && qb.orderBy.isEmpty)
       err("correlated IN with LIMIT/DISTINCT ON needs an ORDER BY " +
         "(the kept rows are arbitrary without one)")
-    // the (keys, ON keys, ORDER BY keys, value) row stream: inner rows
-    // for a plain body; for a GROUP BY body the surviving groups, with
-    // the ON keys and ORDER BY bound POST-aggregation (group keys /
-    // aggregates, alias-substituted), so their aggregate calls ride
-    // groupedCorrelated's select-agg set. The reference grammar composes
-    // DISTINCT ON / LIMIT with grouped bodies freely
-    // (mod.rs:349-360,503-544).
-    val (src, keyCols, bCtx, onExprs, ordExprs) =
-      if (qb.groupBy.isEmpty) {
-        val keys = keyPairs.map { case (ie, _) => bindExpr(ie, innerCtx) }
-        (innerCtx.rel.df, keys, innerCtx, onKeys, qb.orderBy.map(_.expr))
-      } else {
-        val ords = qb.orderBy.map(ok => substituteAliases(ok.expr, qb.selectList))
-        val ons = onKeys.map(substituteAliases(_, qb.selectList))
-        val gs = groupedCorrelated(qb, innerCtx, keyPairs,
-          (aggInSelect ++ ords.flatMap(collectAggs) ++ ons.flatMap(collectAggs)).distinct,
-          bodyCtes)
-        (gs.filtered, gs.keyNames.map(gs.grouped(_)), gs.gCtx, ons, ords)
-      }
-    val keyNames = keyCols.map(_ => fresh("ik"))
-    val onNames = if (shaped) onExprs.map(_ => fresh("ion")) else Nil
-    val ordNames = if (shaped) ordExprs.map(_ => fresh("iord")) else Nil
-    var df = src.select(
-      (keyCols.zip(keyNames).map { case (k, kn) => k.as(kn) } ++
-        onExprs.zip(onNames).map { case (e, on) => bindExpr(e, bCtx).as(on) } ++
-        ordExprs.zip(ordNames).map { case (e, on) => bindExpr(e, bCtx).as(on) } :+
-        bindExpr(selectExpr, bCtx).as(n)): _*)
-    if (shaped) {
-      val ordCols = qb.orderBy.zip(ordNames).map { case (ok, on) =>
-        if (ok.desc) col(on).desc else col(on).asc }
-      if (onKeys.nonEmpty) {
-        // keep-first per (correlation keys ∪ ON keys) — DuckDB DISTINCT
-        // ON semantics scoped to each outer row's set
-        val rn = fresh("irn")
-        df = df.withColumn(rn, row_number().over(
-            Window.partitionBy((keyNames ++ onNames).map(col): _*).orderBy(ordCols: _*)))
-          .filter(col(rn) === 1).drop(rn)
-      }
-      qb.limit.foreach { lc =>
-        val off = lc.offset.map(evalLimitInt(_, "OFFSET")).getOrElse(0)
-        df = slicePerKey(df, keyNames.map(col), ordCols, evalLimitInt(lc.limit, "LIMIT"),
-          off, lc.withTies)
-      }
+    val rows = keyedRows(qb, innerCtx, keyPairs, n)
+    val sliced = qb.limit.fold(rows.df) { lc =>
+      val off = lc.offset.map(evalLimitInt(_, "OFFSET")).getOrElse(0)
+      slicePerKey(rows.df, rows.keyNames.map(col), rows.ordCols,
+        evalLimitInt(lc.limit, "LIMIT"), off, lc.withTies)
     }
-    correlate(df, keyNames, keyPairs, ctx).select(col(n))
+    correlate(sliced, rows.keyNames, keyPairs, ctx).select(col(n))
   }
 
-  /** Scalar subquery.
+  /** Result of [[keyedRows]]: the row frame, its lifted correlation-key
+    * column names and the body's ORDER BY over its columns. */
+  private final case class KeyedRows(df: DataFrame, keyNames: Seq[String],
+      ordCols: Seq[Column])
+
+  /** The rows of a row-producing equality-correlated body, built
+    * UNCORRELATED with the correlation keys lifted to fresh columns, so
+    * [[correlate]] filters them on top (classic `groupBy` and windows
+    * fail on a pending outer reference): the inner rows for a plain
+    * body, the HAVING-surviving groups of (correlation keys ∪ GROUP BY
+    * keys) for a GROUP BY body. The value is the column `n`. Under
+    * LIMIT or DISTINCT ON the body's ORDER BY and ON keys are bound
+    * (post-aggregation and alias-substituted for a GROUP BY body, so
+    * their aggregate calls ride the grouped aggregate), and DISTINCT ON
+    * keeps the first row per (correlation keys ∪ ON keys) — DuckDB
+    * DISTINCT ON scoped to each outer row's rows. The reference grammar
+    * composes DISTINCT ON / LIMIT with grouped bodies freely
+    * (mod.rs:349-360,503-544). */
+  private def keyedRows(qb: QueryBody, innerCtx: Ctx, keyPairs: Seq[(Expr, Expr)],
+      n: String): KeyedRows = {
+    val onKeys = qb.distinct.toSeq.flatten.map(substituteAliases(_, qb.selectList))
+    val ordExprs =
+      if (qb.limit.isEmpty && onKeys.isEmpty) Nil
+      else qb.orderBy.map(ok => substituteAliases(ok.expr, qb.selectList))
+    val selectExpr = qb.selectList.head.expr
+    val (src, keyCols, bCtx) =
+      if (qb.groupBy.isEmpty)
+        (innerCtx.rel.df, keyPairs.map { case (ie, _) => bindExpr(ie, innerCtx) }, innerCtx)
+      else {
+        val gs = groupedCorrelated(qb, innerCtx, keyPairs,
+          (selectExpr +: (onKeys ++ ordExprs)).flatMap(collectAggs).distinct, innerCtx.ctes)
+        (gs.filtered, gs.keyNames.map(gs.grouped(_)), gs.gCtx)
+      }
+    val keyNames = keyCols.map(_ => fresh("ik"))
+    val onNames = onKeys.map(_ => fresh("ion"))
+    val ordNames = ordExprs.map(_ => fresh("iord"))
+    val df = src.select(
+      (keyCols.zip(keyNames).map { case (k, kn) => k.as(kn) } ++
+        onKeys.zip(onNames).map { case (e, on) => bindExpr(e, bCtx).as(on) } ++
+        ordExprs.zip(ordNames).map { case (e, on) => bindExpr(e, bCtx).as(on) } :+
+        bindExpr(selectExpr, bCtx).as(n)): _*)
+    val ordCols = qb.orderBy.zip(ordNames).map { case (ok, on) =>
+      if (ok.desc) col(on).desc else col(on).asc }
+    val rn = fresh("irn")
+    val kept =
+      if (onKeys.isEmpty) df
+      else df.withColumn(rn, row_number().over(
+          Window.partitionBy((keyNames ++ onNames).map(col): _*).orderBy(ordCols: _*)))
+        .filter(col(rn) === 1).drop(rn)
+    KeyedRows(kept, keyNames, ordCols)
+  }
+
+  /** Scalar subquery, placed on the outer frame with `Dataset.scalar()`
+    * ([[placeScalar]]).
     *
-    * Uncorrelated: aggregate to exactly one row (min + count) and
-    * broadcast-cross-join it on — lazy and distributed, no driver-side
-    * `.first()`. The count guards SQL semantics: >1 row raises at
-    * execution, 0 rows yields NULL (the old `limit(1)` silently picked an
-    * arbitrary row, and the cross join silently EMPTIED the outer result
-    * on a 0-row subquery — both wrong).
+    * Uncorrelated: aggregate to exactly one row (min + count). The count
+    * guards SQL semantics: >1 row raises at execution, 0 rows yields
+    * NULL. Spark runs it as a one-row subquery, not a join.
     *
-    * Correlated (`SELECT agg(..) FROM t WHERE t.k = outer.k`): standard
-    * decorrelation — group the inner side by its correlation keys, left
-    * join the 1-row-per-key aggregate onto the outer relation on those
-    * keys, NULL where no group matches (0 for a bare count, matching SQL).
-    * Only equality correlation is supported; non-equi correlation errors. */
+    * Equality-correlated: [[correlatedScalar]], which Catalyst
+    * decorrelates. Any other correlation: [[decorrelateScalarTheta]]. */
   private def bindScalarSubquery(q: Query, ctx: Ctx): Column = {
     q match {
       case qb: QueryBody if qb.from.isDefined && qb.where.isDefined =>
         // the body's own WITH list binds first (uncorrelated) — its
         // names are visible to FROM/JOINs and local conjuncts
         val bodyCtes = bindBodyCtes(qb, ctx.ctes)
-        val innerBase = bindSource(qb.from.get, bodyCtes)
-        val innerRel = qb.joins.foldLeft(innerBase)((r, j) => bindJoin(r, j, bodyCtes))
-        val conjuncts = splitAnd(qb.where.get)
-        val (local, correlated) = conjuncts.partition(resolvesWithin(_, innerRel))
+        val innerRel = bodyRel(qb, bodyCtes, "scalar subquery")
+        val (local, correlated) = splitAnd(qb.where.get).partition(resolvesWithin(_, innerRel))
         if (correlated.nonEmpty)
-          return decorrelateScalar(qb, innerRel, local, correlated, ctx, bodyCtes)
+          return if (equalityOrientable(correlated, innerRel, ctx.rel))
+            correlatedScalar(qb, innerRel, local, correlated, ctx, bodyCtes)
+          else decorrelateScalarTheta(qb, innerRel, local, correlated, ctx, bodyCtes)
       case _ => ()
     }
     val sub = bindQuery(q, ctx.ctes)
@@ -3424,12 +3443,96 @@ final class Binder(
     val one = sub
       .agg(min(col(sub.columns.head)).as(n), count(lit(1)).as(cnt))
       .select(when(col(cnt) <= 1, col(n))
-        .otherwise(raise_error(lit("scalar subquery returned more than one row")))
+        .otherwise(raise_error(lit(tooManyRows)))
         .as(n))
-    ctx.rel = Rel(
-      ctx.rel.df.crossJoin(broadcast(one)),
-      ctx.rel.scopes :+ hiddenScope(one, Seq(n)))
-    one(n)
+    placeScalar(one.scalar(), ctx)
+  }
+
+  /** The engine's own >1-row scalar error text, raised lazily per outer
+    * row (Spark's eager SCALAR_SUBQUERY_TOO_MANY_ROWS never fires). */
+  private val tooManyRows = "scalar subquery returned more than one row"
+
+  /** Equality-correlated scalar subquery as ONE frame for
+    * `Dataset.scalar()`; Catalyst decorrelates it into a single left
+    * join on the correlation keys:
+    *  - ungrouped aggregate body: [[correlatedAgg]], whose empty-set row
+    *    Catalyst's count-bug rewrite supplies for unmatched keys. A
+    *    HAVING rides along as a second struct field and gates the value
+    *    in the outer expression (filtering inside the body would add a
+    *    domain join);
+    *  - ORDER BY … LIMIT 1 [OFFSET k]: the (k+1)-th row of
+    *    [[keyedRows]] (DISTINCT first, when present); Catalyst turns the
+    *    correlated LIMIT into a row_number window over the keys;
+    *  - any other body (bare lookup, DISTINCT, DISTINCT ON, GROUP BY
+    *    [HAVING]): `struct(first(v), count(1))` over [[keyedRows]], and
+    *    the outer expression raises on more than one row, so only outer
+    *    rows that reach an offending key raise. Such a body never goes
+    *    to `scalar()` bare: Spark plans a LeftSingle nested-loop join. */
+  private def correlatedScalar(qb0: QueryBody, innerRel: Rel, local: Seq[Expr],
+      correlated: Seq[Expr], ctx: Ctx, bodyCtes: Map[String, DataFrame]): Column = {
+    val what = "correlated scalar subquery"
+    val qb = stripNoopLimit(qb0)
+    if (qb.selectList.size != 1) err("scalar subquery must produce 1 column")
+    val valueExpr = qb.selectList.head.expr
+    val hasAgg = collectAggs(valueExpr).nonEmpty
+    val isDistinct = qb.distinct.contains(Nil)
+    val off = qb.limit.map { lc =>
+      if (evalLimitInt(lc.limit, "LIMIT") != 1)
+        err(s"$what supports only LIMIT 1 (a scalar needs exactly one row)")
+      if (lc.withTies)
+        err(s"$what: LIMIT … WITH TIES is not scalar (ties can yield several rows)")
+      lc.offset.map(evalLimitInt(_, "OFFSET")).getOrElse(0)
+    }
+    if (qb.groupBy.isEmpty && qb.having.isDefined && !hasAgg)
+      err(s"$what with HAVING needs an aggregate or GROUP BY body")
+    if (qb.groupBy.isEmpty && hasAgg && (off.isDefined || qb.distinct.isDefined))
+      err(s"$what: an aggregate body already yields one row — drop its " +
+        "LIMIT / DISTINCT")
+    if (isDistinct && qb.groupBy.nonEmpty)
+      err(s"$what: DISTINCT applies to plain bodies only (a GROUP BY " +
+        "body already dedupes per group)")
+    if ((off.isDefined || qb.distinct.exists(_.nonEmpty)) && qb.orderBy.isEmpty)
+      err(s"$what with LIMIT / DISTINCT ON needs an ORDER BY (the kept " +
+        "row is arbitrary without one)")
+    // SELECT DISTINCT … ORDER BY: the sort keys must be the selected
+    // value (standard SQL), so dedup-then-rank is DISTINCT-then-LIMIT
+    if (isDistinct && off.isDefined &&
+        qb.orderBy.exists(ok => substituteAliases(ok.expr, qb.selectList) != valueExpr))
+      err(s"$what with DISTINCT: ORDER BY expressions must appear in the select list")
+    val keyPairs = orientCorrelated(correlated, innerRel, ctx.rel, what)
+    val innerCtx = new Ctx(innerRel, None, bodyCtes)
+    applyLocal(local, innerCtx, what)
+
+    if (qb.groupBy.isEmpty && hasAgg) {
+      val having = qb.having.map(substituteAliases(_, qb.selectList))
+      val (body, v +: h) = correlatedAgg(innerCtx, keyPairs, valueExpr +: having.toSeq, ctx)
+      if (h.isEmpty) return placeScalar(body.select(v).scalar(), ctx)
+      val s = placeScalar(body.select(struct(v.as("v"), h.head.as("h"))).scalar(), ctx)
+      return when(s("h"), s("v"))
+    }
+    val vn = fresh("sv")
+    val rows = keyedRows(qb, innerCtx, keyPairs, vn)
+    val body = correlate(if (isDistinct) rows.df.distinct() else rows.df,
+      rows.keyNames, keyPairs, ctx)
+    off match {
+      case Some(o) =>
+        placeScalar(body.orderBy(rows.ordCols: _*).offset(o).limit(1).select(col(vn)).scalar(), ctx)
+      case None =>
+        val s = placeScalar(body.select(
+          struct(first(col(vn)).as("v"), count(lit(1)).as("n"))).scalar(), ctx)
+        when(s("n") > 1, raise_error(lit(tooManyRows))).otherwise(s("v"))
+    }
+  }
+
+  /** Put a `Dataset.scalar()` column on the outer frame ONCE, under a
+    * fresh hidden name, and return a reference to it. Every use of a
+    * scalar-subquery Column is a subquery of its own — Catalyst plans
+    * one join per use — so callers read fields of the placed column. */
+  private def placeScalar(s: Column, ctx: Ctx): Column = {
+    val n = fresh("scalar")
+    val df = ctx.rel.df.select(col("*"), s.as(n))
+    ctx.rel = Rel(df, ctx.rel.scopes :+ hiddenScope(df, Seq(n)))
+    df(n)
   }
 
   /** Filter the inner side of a subquery by its local conjuncts (via
@@ -4054,8 +4157,7 @@ final class Binder(
           vName -> first(when(mkCol, bindExpr(valueExpr, aggCtx))),
           cName -> count(mkCol)))
       return (when(coalesce(proj(cName), lit(0L)) <= 1, proj(vName))
-        .otherwise(raise_error(lit(
-          "scalar subquery returned more than one row"))), None)
+        .otherwise(raise_error(lit(tooManyRows))), None)
     }
     val aggPairs = aggCalls.map(fc => (fc, fresh("tagg")))
     // decomposable aggregates over a monotone single-conjunct
@@ -4116,170 +4218,6 @@ final class Binder(
     (bindExpr(valueExpr, vCtx), havingExpr.map(bindExpr(_, vCtx)))
   }
 
-  /** Correlated scalar subquery with ORDER BY … LIMIT 1 — the
-    * latest-value-per-key pattern (`SELECT o_total FROM orders WHERE
-    * o_custkey = c.k ORDER BY o_date DESC LIMIT 1`): a row_number
-    * window partitioned by the correlation keys picks the top row per
-    * key, which left-joins onto the outer relation. Window buckets are
-    * correlation-key groups (same shape as DISTINCT ON — no global
-    * window), and unmatched keys are NULL via the left join. LIMIT 1
-    * without ORDER BY would pick an arbitrary row per key; rejected. */
-  private def decorrelateScalarTop1(qb: QueryBody, innerRel: Rel,
-      local: Seq[Expr], correlated: Seq[Expr], ctx: Ctx,
-      bodyCtes: Map[String, DataFrame]): Column = {
-    val what = "correlated scalar subquery with LIMIT"
-    val lc = qb.limit.get
-    // LIMIT 1 OFFSET k = the (k+1)-th row in sort order per key; fewer
-    // rows than that → no row → NULL through the left join, same as an
-    // unmatched key
-    val off = lc.offset.map(evalLimitInt(_, "OFFSET")).getOrElse(0)
-    if (evalLimitInt(lc.limit, "LIMIT") != 1)
-      err(s"$what supports only LIMIT 1 (a scalar needs exactly one row)")
-    if (lc.withTies)
-      err(s"$what: LIMIT … WITH TIES is not scalar (ties can yield " +
-        "several rows)")
-    // DISTINCT ON (k) v … ORDER BY … LIMIT 1 [OFFSET o]: keep-first
-    // per (correlation ∪ ON keys) in the body's ORDER BY, then the rank
-    // picks the (o+1)-th SURVIVOR — equality parity with the theta
-    // path's qe164 shape (round 9); composes with GROUP BY (the groups
-    // are the rows the ON keys dedup)
-    val onKeys = qb.distinct.toSeq.flatten
-      .map(substituteAliases(_, qb.selectList))
-    val isDistinct = qb.distinct.contains(Nil)
-    if (qb.selectList.size != 1) err("scalar subquery must produce 1 column")
-    if (qb.orderBy.isEmpty)
-      err(s"$what needs an ORDER BY (LIMIT 1 without one picks an " +
-        "arbitrary row per key)")
-    val valueExpr = qb.selectList.head.expr
-    val valueAggs = collectAggs(valueExpr).distinct
-    if (qb.groupBy.isEmpty && (valueAggs.nonEmpty || qb.having.isDefined))
-      err(s"$what takes a plain value expression (drop the LIMIT for " +
-        "aggregate bodies — they already yield one row)")
-    if (isDistinct && qb.groupBy.nonEmpty)
-      err(s"$what: DISTINCT applies to plain bodies only (a GROUP BY " +
-        "body already dedupes per group)")
-    // SELECT DISTINCT … ORDER BY: the sort keys must be the selected
-    // value (standard SQL restriction) — then dedup before the rank is
-    // exactly DISTINCT-then-LIMIT
-    if (isDistinct)
-      qb.orderBy.foreach { ok =>
-        if (substituteAliases(ok.expr, qb.selectList) != valueExpr)
-          err(s"$what with DISTINCT: ORDER BY expressions must appear " +
-            "in the select list")
-      }
-    val keyPairs = orientCorrelated(correlated, innerRel, ctx.rel, what)
-    val innerCtx = new Ctx(innerRel, None, bodyCtes)
-    applyLocal(local, innerCtx, what)
-    if (qb.groupBy.nonEmpty)
-      return groupedScalarTop1(qb, innerCtx, keyPairs, valueAggs, ctx, off,
-        bodyCtes, onKeys)
-    val keyNames = keyPairs.indices.map(_ => fresh("lk"))
-    val valName = fresh("lval")
-    val ordNames = qb.orderBy.indices.map(_ => fresh("lord"))
-    val onNames = onKeys.indices.map(_ => fresh("lon"))
-    val base0 = innerCtx.rel.df.select(
-      (keyPairs.zip(keyNames).map { case ((ie, _), kn) => bindExpr(ie, innerCtx).as(kn) } ++
-        Seq(bindExpr(valueExpr, innerCtx).as(valName)) ++
-        onKeys.zip(onNames).map { case (oe, on) => bindExpr(oe, innerCtx).as(on) } ++
-        qb.orderBy.zip(ordNames).map { case (ok, on) => bindExpr(ok.expr, innerCtx).as(on) }): _*)
-    val ordColsAll = qb.orderBy.zip(ordNames).map { case (ok, on) =>
-      if (ok.desc) col(on).desc else col(on).asc }
-    val base1 = if (isDistinct) base0.distinct() else base0
-    val base =
-      if (onKeys.isEmpty) base1
-      else {
-        val rn0 = fresh("ldorn")
-        base1.withColumn(rn0, row_number().over(
-            Window.partitionBy((keyNames ++ onNames).map(col): _*)
-              .orderBy(ordColsAll: _*)))
-          .filter(col(rn0) === 1).drop(rn0)
-      }
-    val w = Window.partitionBy(keyNames.map(col): _*)
-      .orderBy(ordColsAll: _*)
-    val rn = fresh("lrn")
-    val proj = base.withColumn(rn, row_number().over(w))
-      .filter(col(rn) === (off + 1))
-      .select((keyNames.map(col) :+ col(valName)): _*)
-    val outerCols = keyPairs.map { case (_, oe) => bindExpr(oe, ctx) }
-    outerCols.foreach { c =>
-      if (Try(ctx.rel.df.select(c).schema).isFailure)
-        err(s"$what here may only reference columns of the current " +
-          "(left) relation — move it to WHERE or rewrite the join")
-    }
-    val joinCond = outerCols.zip(keyNames).map { case (oc, kn) => oc === proj(kn) }
-      .reduce(_ && _)
-    ctx.rel = Rel(ctx.rel.df.join(proj, joinCond, "left"),
-      ctx.rel.scopes :+ hiddenScope(proj, Seq(valName)))
-    proj(valName)
-  }
-
-  /** Correlated scalar with GROUP BY … ORDER BY … LIMIT 1 [OFFSET k] —
-    * the top-group-per-key pattern (`SELECT sum(x) FROM t WHERE t.k =
-    * o.k GROUP BY g ORDER BY sum(x) DESC LIMIT 1`): the shared grouped
-    * correlated lowering builds one row per (correlation key ∪ GROUP BY
-    * key) group, a row_number window bucketed by the correlation keys
-    * ranks the surviving groups in the body's ORDER BY (which may
-    * reference aggregates), and the (k+1)-th group's value left-joins
-    * back. LIMIT 1 guarantees at most one row per key, so no >1-row
-    * raise is needed; missing keys — or fewer than k+1 surviving
-    * groups — are NULL through the left join. Window buckets are
-    * correlation-key groups, never a global sort.
-    * Reference: correlated scalar subqueries compose with GROUP BY and
-    * LIMIT freely (/root/reference/src/parser/mod.rs:447-544,1229-1245). */
-  private def groupedScalarTop1(qb: QueryBody, innerCtx: Ctx,
-      keyPairs: Seq[(Expr, Expr)], valueAggs: Seq[FnCall], ctx: Ctx,
-      off: Int, bodyCtes: Map[String, DataFrame],
-      onKeys: Seq[Expr] = Nil): Column = {
-    val what = "correlated scalar subquery with GROUP BY and LIMIT"
-    val valueExpr = qb.selectList.head.expr
-    // ORDER BY terms may be aggregates (ranking groups by their
-    // aggregate) — fold them into the grouped aggregate set, as may
-    // DISTINCT ON keys (round 9: keep-first per ON key among the
-    // surviving GROUPS before the rank)
-    val ordExprs = qb.orderBy.map(ok => substituteAliases(ok.expr, qb.selectList))
-    val ordAggs = ordExprs.flatMap(collectAggs)
-    val gs = groupedCorrelated(qb, innerCtx, keyPairs,
-      (valueAggs ++ ordAggs ++ onKeys.flatMap(collectAggs)).distinct, bodyCtes)
-    val valName = fresh("gtval")
-    val ordNames = ordExprs.indices.map(_ => fresh("gtord"))
-    val onNames = onKeys.indices.map(_ => fresh("gton"))
-    val base0 = gs.filtered.select(
-      (gs.keyNames.map(gs.grouped(_)) ++
-        Seq(bindExpr(valueExpr, gs.gCtx).as(valName)) ++
-        onKeys.zip(onNames).map { case (oe, on) =>
-          bindExpr(oe, gs.gCtx).as(on) } ++
-        ordExprs.zip(ordNames).map { case (oe, on) =>
-          bindExpr(oe, gs.gCtx).as(on) }): _*)
-    val ordColsAll = qb.orderBy.zip(ordNames).map { case (ok, on) =>
-      if (ok.desc) col(on).desc else col(on).asc }
-    val base =
-      if (onKeys.isEmpty) base0
-      else {
-        val rn0 = fresh("gtdorn")
-        base0.withColumn(rn0, row_number().over(
-            Window.partitionBy((gs.keyNames ++ onNames).map(col): _*)
-              .orderBy(ordColsAll: _*)))
-          .filter(col(rn0) === 1).drop(rn0)
-      }
-    val w = Window.partitionBy(gs.keyNames.map(col): _*)
-      .orderBy(ordColsAll: _*)
-    val rn = fresh("gtrn")
-    val proj = base.withColumn(rn, row_number().over(w))
-      .filter(col(rn) === (off + 1))
-      .select((gs.keyNames.map(col) :+ col(valName)): _*)
-    val outerCols = keyPairs.map { case (_, oe) => bindExpr(oe, ctx) }
-    outerCols.foreach { c =>
-      if (Try(ctx.rel.df.select(c).schema).isFailure)
-        err(s"$what here may only reference columns of the current " +
-          "(left) relation — move it to WHERE or rewrite the join")
-    }
-    val joinCond = outerCols.zip(gs.keyNames).map { case (oc, kn) =>
-      oc === proj(kn) }.reduce(_ && _)
-    ctx.rel = Rel(ctx.rel.df.join(proj, joinCond, "left"),
-      ctx.rel.scopes :+ hiddenScope(proj, Seq(valName)))
-    proj(valName)
-  }
-
   /** LIMIT / plain DISTINCT over a body that already yields AT MOST ONE
     * row (an ungrouped aggregate, with or without HAVING) are no-ops —
     * engines accept the compositions freely, so strip them instead of
@@ -4303,102 +4241,6 @@ final class Binder(
         qb.copy(limit = None)
       case _ => qb
     }
-  }
-
-  /** DISTINCT ON body in a correlated scalar lookup (`SELECT DISTINCT
-    * ON (g) v FROM t WHERE t.k = outer.k ORDER BY …`): keep-first per
-    * (correlation key ∪ ON key) in the body's ORDER BY — the window
-    * buckets are key-group-sized, never global — then the scalar
-    * contract applies to the SURVIVING rows per correlation key: 0 →
-    * NULL through the left join, >1 ON-groups → runtime raise deferred
-    * to the output expression (only outer rows that hit the offending
-    * key raise). */
-  private def distinctOnScalar(qb: QueryBody, innerRel: Rel,
-      local: Seq[Expr], correlated: Seq[Expr], ctx: Ctx,
-      bodyCtes: Map[String, DataFrame]): Column = {
-    val what = "correlated scalar subquery (DISTINCT ON body)"
-    val onKeys = qb.distinct.get
-    if (qb.groupBy.nonEmpty || qb.having.isDefined ||
-        collectAggs(qb.selectList.head.expr).nonEmpty)
-      err(s"$what takes a plain body (no GROUP BY/HAVING/aggregates)")
-    if (qb.orderBy.isEmpty)
-      err(s"$what needs an ORDER BY (the kept row per ON key is " +
-        "arbitrary without one)")
-    if (qb.selectList.size != 1) err("scalar subquery must produce 1 column")
-    val valueExpr = qb.selectList.head.expr
-    val keyPairs = orientCorrelated(correlated, innerRel, ctx.rel, what)
-    val innerCtx = new Ctx(innerRel, None, bodyCtes)
-    applyLocal(local, innerCtx, what)
-    val keyNames = keyPairs.indices.map(_ => fresh("dok"))
-    val onNames = onKeys.indices.map(_ => fresh("doon"))
-    val ordNames = qb.orderBy.indices.map(_ => fresh("doord"))
-    val valName = fresh("doval")
-    val cntName = fresh("docnt")
-    val base = innerCtx.rel.df.select(
-      (keyPairs.zip(keyNames).map { case ((ie, _), kn) =>
-        bindExpr(ie, innerCtx).as(kn) } ++
-        onKeys.zip(onNames).map { case (oe, on) =>
-          bindExpr(oe, innerCtx).as(on) } ++
-        qb.orderBy.zip(ordNames).map { case (ok, on) =>
-          bindExpr(ok.expr, innerCtx).as(on) } :+
-        bindExpr(valueExpr, innerCtx).as(valName)): _*)
-    val ordCols = qb.orderBy.zip(ordNames).map { case (ok, on) =>
-      if (ok.desc) col(on).desc else col(on).asc }
-    val rn = fresh("dorn")
-    val kept = base.withColumn(rn, row_number().over(
-        Window.partitionBy((keyNames ++ onNames).map(col): _*)
-          .orderBy(ordCols: _*)))
-      .filter(col(rn) === 1)
-    val proj = kept.groupBy(keyNames.map(col): _*)
-      .agg(first(col(valName)).as(valName), count(lit(1)).as(cntName))
-    val outerCols = keyPairs.map { case (_, oe) => bindExpr(oe, ctx) }
-    outerCols.foreach { c =>
-      if (Try(ctx.rel.df.select(c).schema).isFailure)
-        err(s"$what here may only reference columns of the current " +
-          "(left) relation — move it to WHERE or rewrite the join")
-    }
-    val joinCond = outerCols.zip(keyNames).map { case (oc, kn) => oc === proj(kn) }
-      .reduce(_ && _)
-    ctx.rel = Rel(ctx.rel.df.join(proj, joinCond, "left"),
-      ctx.rel.scopes :+ hiddenScope(proj, Seq(valName)))
-    when(coalesce(proj(cntName), lit(0L)) <= 1, proj(valName))
-      .otherwise(raise_error(lit("scalar subquery returned more than one row")))
-  }
-
-  /** Bare correlated lookup (`SELECT expr FROM t WHERE t.k = outer.k`
-    * with no aggregate): the inner side groups by the correlation keys
-    * carrying (first value, row count) and left-joins back; unmatched
-    * keys are NULL, keys with several rows raise at execution — SQL
-    * scalar-subquery semantics, enforced distributedly (the count rides
-    * the same aggregate, no extra pass). With `distinct`, the (key,
-    * value) pairs dedupe FIRST — so the >1-row raise counts distinct
-    * values (NULL counts as a value, matching SELECT DISTINCT rows),
-    * and a key whose matches all share one value is a legal scalar. */
-  private def bareCorrelatedLookup(valueExpr: Expr,
-      keyPairs: Seq[(Expr, Expr)], innerCtx: Ctx, ctx: Ctx, what: String,
-      distinct: Boolean = false): Column = {
-    val keyNames = keyPairs.indices.map(_ => fresh("bk"))
-    val valName = fresh("bval")
-    val cntName = fresh("bcnt")
-    val base0 = innerCtx.rel.df.select(
-      (keyPairs.zip(keyNames).map { case ((ie, _), kn) =>
-        bindExpr(ie, innerCtx).as(kn) } :+
-        bindExpr(valueExpr, innerCtx).as(valName)): _*)
-    val base = if (distinct) base0.distinct() else base0
-    val proj = base.groupBy(keyNames.map(col): _*)
-      .agg(first(col(valName)).as(valName), count(lit(1)).as(cntName))
-    val outerCols = keyPairs.map { case (_, oe) => bindExpr(oe, ctx) }
-    outerCols.foreach { c =>
-      if (Try(ctx.rel.df.select(c).schema).isFailure)
-        err(s"$what here may only reference columns of the current " +
-          "(left) relation — move it to WHERE or rewrite the join")
-    }
-    val joinCond = outerCols.zip(keyNames).map { case (oc, kn) => oc === proj(kn) }
-      .reduce(_ && _)
-    ctx.rel = Rel(ctx.rel.df.join(proj, joinCond, "left"),
-      ctx.rel.scopes :+ hiddenScope(proj, Seq(valName)))
-    when(coalesce(proj(cntName), lit(0L)) <= 1, proj(valName))
-      .otherwise(raise_error(lit("scalar subquery returned more than one row")))
   }
 
   /** Correlated scalar subquery with non-equality correlation: theta
@@ -4453,7 +4295,7 @@ final class Binder(
     // DISTINCT ON (k) v … ORDER BY … LIMIT 1 [OFFSET o]: per outer row,
     // keep-first per ON-key tuple in the body's ORDER BY, then the rank
     // picks the (o+1)-th SURVIVOR — the equality path's qe144 shape
-    // (distinctOnScalar) lifted onto the rid frame (VERDICT r8 #5).
+    // (correlatedScalar) lifted onto the rid frame (VERDICT r8 #5).
     // Reference grammar composes DISTINCT ON with scalar position
     // freely: /root/reference/src/parser/mod.rs:349-360,1229-1245.
     val onKeys = qb.distinct.toSeq.flatten
@@ -4774,7 +4616,7 @@ final class Binder(
     * outer frame, inner-join the body source on the correlated
     * conjuncts, group by (rid ∪ explicit GROUP BY keys), HAVING filters
     * the groups, and the per-rid surviving-group count enforces the
-    * scalar contract the way [[decorrelateScalar]]'s grouped path does:
+    * scalar contract the way [[correlatedScalar]]'s grouped path does:
     * 0 groups → NULL (unmatched rids never join back), >1 → runtime
     * raise deferred to the output expression. The correlation join
     * bounds candidate volume; groups never span rids, so the group
@@ -4784,7 +4626,7 @@ final class Binder(
       bodyCtes: Map[String, DataFrame]): Column = {
     // DISTINCT ON over the grouped body: keep-first per (rid ∪ ON
     // keys) among the surviving groups before the rank (round 9, the
-    // groupedScalarTop1 lift under theta); requires the top-1 form —
+    // correlatedScalar shape under theta); requires the top-1 form —
     // without LIMIT the scalar contract over ON-deduped groups is the
     // plain per-rid count guard below, which plain DISTINCT already
     // gets (a GROUP BY body dedupes per group)
@@ -4797,7 +4639,7 @@ final class Binder(
       err(s"$what: DISTINCT ON over a GROUP BY body needs ORDER BY … " +
         "LIMIT 1 (the kept group per ON key is arbitrary without one)")
     // GROUP BY … ORDER BY … LIMIT 1 [OFFSET k]: rank the surviving
-    // groups per rid (the theta analog of groupedScalarTop1) instead of
+    // groups per rid (the theta analog of correlatedScalar's) instead of
     // enforcing the one-group scalar contract
     val top1Off: Option[Int] = qb.limit.map { lc =>
       if (evalLimitInt(lc.limit, "LIMIT") != 1)
@@ -4904,7 +4746,7 @@ final class Binder(
         ctx.rel = Rel(outer.join(proj, col(rid) === col(rid2), "left"),
           ctx.rel.scopes :+ hiddenScope(proj, Seq(valName)))
         when(coalesce(proj(gcName), lit(0L)) <= 1, proj(valName))
-          .otherwise(raise_error(lit("scalar subquery returned more than one row")))
+          .otherwise(raise_error(lit(tooManyRows)))
     }
   }
 
@@ -5236,133 +5078,6 @@ final class Binder(
       .when(coalesce(proj(cntN), lit(0L)) === 0, lit(false))
       .when(lhs.isNull || proj(nullN), lit(null).cast("boolean"))
       .otherwise(lit(false))
-  }
-
-  /** Correlated scalar subquery decorrelation. Bodies supported:
-    *
-    *  - plain aggregate (`SELECT agg(..) FROM t WHERE t.k = o.k`): group
-    *    the inner side by the correlation keys, left join the 1-row-per-
-    *    key aggregate onto the outer relation. SQL's UNGROUPED aggregate
-    *    produces one row even for keys with NO inner rows — count-family
-    *    expressions re-evaluate with counts = 0 as the no-rows fallback,
-    *    others are NULL. A HAVING clause filters that one row (evaluated
-    *    with zeroed counts for the no-rows case).
-    *  - explicit GROUP BY (+ HAVING): one row per surviving (key, group);
-    *    more than one surviving group per outer key raises at execution
-    *    (SQL scalar-subquery semantics), zero groups yield NULL.
-    *
-    * Only equality correlation is supported; non-equi correlation errors. */
-  private def decorrelateScalar(qb0: QueryBody, innerRel: Rel, local: Seq[Expr],
-      correlated: Seq[Expr], ctx: Ctx,
-      bodyCtes: Map[String, DataFrame]): Column = {
-    val what = "correlated scalar subquery"
-    val qb = stripNoopLimit(qb0)
-    if (!equalityOrientable(correlated, innerRel, ctx.rel))
-      return decorrelateScalarTheta(qb, innerRel, local, correlated, ctx, bodyCtes)
-    if (qb.limit.isDefined)
-      return decorrelateScalarTop1(qb, innerRel, local, correlated, ctx, bodyCtes)
-    if (qb.distinct.exists(_.nonEmpty))
-      return distinctOnScalar(qb, innerRel, local, correlated, ctx, bodyCtes)
-    if (qb.selectList.size != 1) err("scalar subquery must produce 1 column")
-    val valueExpr = qb.selectList.head.expr
-    val valueAggs = collectAggs(valueExpr).distinct
-    if (qb.distinct.contains(Nil) &&
-        (valueAggs.nonEmpty || qb.groupBy.nonEmpty || qb.having.isDefined))
-      err(s"$what: DISTINCT applies to bare lookup bodies only " +
-        "(aggregate bodies already yield one row)")
-    if (valueAggs.isEmpty && qb.groupBy.isEmpty && qb.having.isDefined)
-      err(s"$what with HAVING needs an aggregate or GROUP BY body")
-
-    val keyPairs = orientCorrelated(correlated, innerRel, ctx.rel, what)
-
-    val innerCtx = new Ctx(innerRel, None, bodyCtes)
-    applyLocal(local, innerCtx, "correlated scalar subquery")
-
-    if (valueAggs.isEmpty && qb.groupBy.isEmpty)
-      // bare lookup body (`SELECT expr FROM t WHERE t.k = outer.k`):
-      // SQL returns the single matching row's value, NULL when none,
-      // and errors when several. Group the inner side by the
-      // correlation keys carrying (first value, row count); the >1-row
-      // raise fires in the OUTPUT expression so only outer rows that
-      // actually match an offending key raise — same deferred-raise
-      // rule as the GROUP BY branch below. ORDER BY without LIMIT is a
-      // no-op here (LIMIT bodies routed to decorrelateScalarTop1 above).
-      return bareCorrelatedLookup(valueExpr, keyPairs, innerCtx, ctx, what,
-        distinct = qb.distinct.contains(Nil))
-
-    val ungrouped = qb.groupBy.isEmpty
-    val gs = groupedCorrelated(qb, innerCtx, keyPairs, valueAggs, bodyCtes)
-    val GroupedSub(grouped, _, keyNames, aggPairs, gCtx, havingExpr) = gs
-
-    val valName = fresh("cscalar")
-    val presentName = fresh("cpresent")
-    val hvName = fresh("chv")
-    val gcName = fresh("cgc")
-    val proj: DataFrame =
-      if (ungrouped) {
-        // keep keys-with-rows that FAIL the having distinguishable from
-        // keys with no rows at all: having rides along unfiltered and is
-        // applied in the output expression below
-        grouped.select((keyNames.map(grouped(_)) ++ Seq(
-          lit(true).as(presentName),
-          bindExpr(valueExpr, gCtx).as(valName)) ++
-          havingExpr.map(h => bindExpr(h, gCtx).as(hvName)).toSeq): _*)
-      } else {
-        val p1 = gs.filtered.select(
-          (keyNames.map(grouped(_)) :+ bindExpr(valueExpr, gCtx).as(valName)): _*)
-        // carry the per-key surviving-group count through the join; the
-        // >1-row raise happens in the OUTPUT expression below, so only
-        // outer rows that actually match an offending key raise (an
-        // eager raise here would fail on keys the outer query filtered
-        // away — SQL evaluates the subquery per outer row)
-        p1.groupBy(keyNames.map(col): _*)
-          .agg(min(col(valName)).as(valName), count(lit(1)).as(gcName))
-      }
-
-    // the decorrelated aggregate joins onto ctx.rel.df — in a JOIN ON
-    // condition that frame is the LEFT side only, while the scopes may
-    // include the right side; reject outer references the join cannot
-    // express instead of failing later with a bare missing-attribute
-    val outerCols = keyPairs.map { case (_, oe) => bindExpr(oe, ctx) }
-    outerCols.foreach { c =>
-      if (Try(ctx.rel.df.select(c).schema).isFailure)
-        err("correlated scalar subquery here may only reference columns " +
-          "of the current (left) relation — move it to WHERE or rewrite " +
-          "the join")
-    }
-    val joinCond = outerCols.zip(keyNames).map { case (oc, kn) => oc === proj(kn) }
-      .reduce(_ && _)
-    ctx.rel = Rel(ctx.rel.df.join(proj, joinCond, "left"),
-      ctx.rel.scopes :+ hiddenScope(proj, Seq(valName)))
-
-    if (!ungrouped)
-      // unmatched outer rows: gc is NULL → coalesce 0 → value (NULL).
-      // Matched rows with >1 surviving group raise, per SQL scalar rules
-      when(coalesce(proj(gcName), lit(0L)) <= 1, proj(valName))
-        .otherwise(raise_error(lit("scalar subquery returned more than one row")))
-    else {
-      // no-rows fallback: re-evaluate with count-family aggregates = 0
-      // and everything else NULL; a HAVING gates both the real row and
-      // the fallback (a failed HAVING means no row → NULL)
-      val zeroCtx = new Ctx(Rel(grouped, Seq(Scope(None, grouped, grouped.columns.toSeq))),
-        None, ctx.ctes,
-        subst = aggPairs.map { case (fc, _) =>
-          (fc: Expr) -> (if (isCountFamily(fc.name)) lit(0L) else lit(null))
-        }.toMap)
-      val zeroVal = bindExpr(valueExpr, zeroCtx)
-      val fallback = havingExpr match {
-        case Some(h) => when(bindExpr(h, zeroCtx), zeroVal).otherwise(lit(null))
-        case None => zeroVal
-      }
-      havingExpr match {
-        case Some(_) =>
-          when(proj(presentName).isNull, fallback)
-            .when(coalesce(proj(hvName), lit(false)), proj(valName))
-            .otherwise(lit(null))
-        case None =>
-          when(proj(presentName).isNull, fallback).otherwise(proj(valName))
-      }
-    }
   }
 
   private def bindBinary(op: String, l: Expr, r: Expr, ctx: Ctx): Column = {

@@ -4,12 +4,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec,
+  CartesianProductExec}
 
 /** Round-4 binder/engine hardening: dynamic LIKE/ILIKE patterns,
   * IN-list → isin/InSet plan shape, aggregated EXISTS under OR,
   * correlated IN with DISTINCT / GROUP BY bodies, `$n` parameters in
   * table-function args, and Serial32 overflow rejection. */
-class Round4Spec extends AnyFunSuite with BeforeAndAfterAll {
+class Round4Spec extends AnyFunSuite with BeforeAndAfterAll
+    with AdaptiveSparkPlanHelper {
 
   private var spark: SparkSession = _
   private var engine: Engine = _
@@ -272,6 +276,41 @@ class Round4Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("more than one row"), e.getMessage)
   }
 
+  test("uncorrelated and equality-correlated scalars plan no nested-loop join") {
+    // one row per shape: the scalar subquery and the number of joins its
+    // executed plan may hold (one per correlated scalar, none for the
+    // uncorrelated one-row subquery)
+    val shapes = Seq(
+      "(select max(o_totalprice) from orders)" -> 0,
+      "(select count(*) from orders where o_custkey = c_custkey)" -> 1,
+      """(select sum(o_totalprice) from orders where o_custkey = c_custkey
+         having count(*) > 5)""" -> 1,
+      "(select n_name from nation where n_nationkey = c_nationkey)" -> 1,
+      "(select distinct n_regionkey from nation where n_nationkey = c_nationkey)" -> 1,
+      """(select count(*) from orders where o_custkey = c_custkey
+         group by o_custkey having count(*) > 1)""" -> 1,
+      """(select distinct on (o_custkey) o_orderkey from orders
+         where o_custkey = c_custkey order by o_custkey, o_orderdate desc, o_orderkey)""" -> 1,
+      """(select o_orderkey from orders where o_custkey = c_custkey
+         order by o_orderdate desc, o_orderkey limit 1)""" -> 1,
+      """(select o_orderkey from orders where o_custkey = c_custkey
+         order by o_orderdate desc, o_orderkey limit 1 offset 1)""" -> 1,
+      """(select o_orderstatus from orders where o_custkey = c_custkey
+         group by o_orderstatus order by count(*) desc, o_orderstatus limit 1)""" -> 1)
+    shapes.foreach { case (sub, want) =>
+      val df = sql(s"select c_custkey, $sub as v from customer")
+      df.collect()
+      val joins = collectWithSubqueries(df.queryExecution.executedPlan) {
+        case j: BaseJoinExec => j
+      }
+      val names = joins.map(j => s"${j.nodeName}(${j.joinType})")
+      assert(!joins.exists(j => j.isInstanceOf[BroadcastNestedLoopJoinExec] ||
+        j.isInstanceOf[CartesianProductExec] || j.joinType.toString == "LeftSingle"),
+        s"$sub: $names")
+      assert(joins.size == want, s"$sub: $names")
+    }
+  }
+
   test("multi-group raise is lazy: outer rows that avoid the offending key pass") {
     // pick a customer whose orders all share ONE status, while other
     // customers have several — SQL evaluates the subquery per outer
@@ -294,6 +333,31 @@ class Round4Spec extends AnyFunSuite with BeforeAndAfterAll {
                     group by g) as s
          from t_lzout where k = 2""").collect())
     assert(e.getMessage.contains("more than one row"))
+    // the same contract for every other row-producing body: key 1
+    // yields one row, key 2 two — raised with the engine's own message,
+    // never Spark's SCALAR_SUBQUERY_TOO_MANY_ROWS
+    Seq(
+      "select v from t_lzin where t_lzin.k = t_lzout.k" -> 10L,
+      "select distinct g from t_lzin where t_lzin.k = t_lzout.k" -> "a",
+      """select distinct on (g) v from t_lzin where t_lzin.k = t_lzout.k
+         order by g, v""" -> 10L
+    ).foreach { case (body, want) =>
+      val one = rows(s"select k, ($body) as s from t_lzout where k = 1")
+      assert(one.map(r => (r.getInt(0), r.get(1))) == Seq((1, want)), body)
+      val e2 = intercept[Exception](
+        rows(s"select k, ($body) as s from t_lzout where k = 2"))
+      assert(e2.getMessage.contains("scalar subquery returned more than one row") &&
+        !e2.getMessage.contains("SCALAR_SUBQUERY_TOO_MANY_ROWS"), body)
+    }
+    // an ungrouped groupArray over no rows is NULL, not Spark's empty
+    // array default for collect_list
+    val arrs = rows(
+      """select k,
+                (select groupArray(v) from t_lzin where t_lzin.k = t_lzout.k) as hit,
+                (select groupArray(v) from t_lzin where t_lzin.k = t_lzout.k + 10) as miss
+         from t_lzout order by k""")
+    assert(arrs.map(r => (r.getInt(0), r.getSeq[Long](1).sorted, r.isNullAt(2))) ==
+      Seq((1, Seq(10L), true), (2, Seq(20L, 30L), true)), arrs)
     sql("drop table t_lzout"); sql("drop table t_lzin")
   }
 

@@ -102,6 +102,14 @@ def expected(t):
             t.get("extras") == "0":
         rules.append(("has:__ssidx_", "scalar grouped top-1 staircase"))
 
+    # an equality-correlated scalar lowers through Dataset.scalar(), which
+    # Catalyst decorrelates into a hash join on the keys; a row-producing
+    # body handed to scalar() bare would plan a LeftSingle nested-loop
+    # join instead (the struct(first, count) aggregate avoids it)
+    if form == "scalar" and t.get("corr") == "eq" and not extras and \
+            t.get("pos") in ("sel", "top", "or"):
+        rules.append(("bnlj==0", "equality scalar via Dataset.scalar()"))
+
     # round-12 rails (derived from 900-query marker profiles, 3 seeds):
     # a negated nested SIBLING at depth 2 always routes the middle
     # lowering through one of the per-pair nested rails; at depth 3 the
@@ -137,6 +145,11 @@ def main(out_dir):
                     print(f"PLAN     {name}: expected zero joins ({desc}); "
                           f"got bnlj={p['bnlj']} smj={p['smj']} "
                           f"bhj={p['bhj']} shj={p['shj']} [{p['class']}]")
+                    n_bad += 1
+            elif rule == "bnlj==0":
+                if p["bnlj"] != 0:
+                    print(f"PLAN     {name}: expected no nested-loop join "
+                          f"({desc}); got bnlj={p['bnlj']} [{p['class']}]")
                     n_bad += 1
             elif rule.startswith("has-any:"):
                 want = rule.split(":", 1)[1].split(",")
