@@ -849,7 +849,10 @@ final class Binder(
       ctx.rel = Rel(ctx.rel.df.filter(cond), ctx.rel.scopes)
     }
     withSub.foreach { e =>
-      val c = bindPredicate(e, ctx)
+      val c = e match {
+        case InSubquery(l, q, neg) => bindInExpr(l, q, neg, ctx, predicate = true, conjunct = true)
+        case _ => bindPredicate(e, ctx)
+      }
       ctx.rel = Rel(ctx.rel.df.filter(c), ctx.rel.scopes)
     }
     existsConjuncts.flatMap(existsOf).foreach { case (q, neg) => lowerExists(q, neg, ctx) }
@@ -2147,37 +2150,15 @@ final class Binder(
           case Seq(SelectItem(e, _)) if !e.isInstanceOf[Wildcard] => e
           case _ => err("IN subquery must produce exactly 1 column")
         }
-        val l = bindExpr(lhs, bCtx)
-        val r = bindExpr(sel, bCtx)
-        val eqCond = corrCond.map(_ && (l === r)).getOrElse(l === r)
-        if (!anti) Rel(rel.df.join(renamed, eqCond, "left_semi"), rel.scopes)
-        else {
-          // the decomposed slices below filter `renamed` ALONE by the
-          // select value — a select item referencing enclosing scopes
-          // cannot slice that way (ADVICE r6: it died with a raw
-          // AnalysisException); fail with the explanation instead
-          if (!resolvesWithin(sel, nCtx.rel))
-            err(s"the select item of a grandparent-correlated NOT IN must " +
-              "reference only the subquery's own relations")
-          // NOT IN's three-valued anti join, DECOMPOSED so the common
-          // case stays hash-joinable (a single `l = r OR l IS NULL OR
-          // r IS NULL` condition forces a nested-loop plan — ~5× on the
-          // qe101/qe110 shapes, and a scale-killer on a real corpus):
-          //   1. prune TRUE memberships — equality anti join (hash,
-          //      with any theta correlation as residual);
-          //   2. a NULL lhs against a NON-EMPTY theta-set is UNKNOWN →
-          //      prune; only the lhs-null slice of the frame pays the
-          //      non-equi join (degenerate-empty for non-null keys);
-          //   3. a NULL inner value makes membership UNKNOWN for every
-          //      remaining lhs → anti against the r-IS-NULL slice of
-          //      the body (small by the same argument).
-          val afterEq = rel.df.join(renamed, eqCond, "left_anti")
-          val nullL = afterEq.filter(l.isNull)
-            .join(renamed, corrCond.getOrElse(lit(true)), "left_anti")
-          val notNullL = afterEq.filter(l.isNotNull)
-            .join(renamed.filter(r.isNull), corrCond.getOrElse(lit(true)), "left_anti")
-          Rel(nullL.unionByName(notNullL), rel.scopes)
-        }
+        // the NOT IN slices filter `renamed` ALONE by the select value —
+        // a select item referencing enclosing scopes cannot slice that
+        // way (ADVICE r6: it died with a raw AnalysisException); fail
+        // with the explanation instead
+        if (anti && !resolvesWithin(sel, nCtx.rel))
+          err(s"the select item of a grandparent-correlated NOT IN must " +
+            "reference only the subquery's own relations")
+        Rel(membershipJoin(rel.df, renamed, corrCond, bindExpr(lhs, bCtx),
+          bindExpr(sel, bCtx), anti), rel.scopes)
     }
   }
 
@@ -3195,7 +3176,10 @@ final class Binder(
   }
 
   /** IN (subquery) as a boolean column, in any position — a filter
-    * predicate passes `predicate = true` ([[bindPredicate]]).
+    * predicate passes `predicate = true` ([[bindPredicate]]), a
+    * top-level WHERE conjunct also `conjunct = true`, which lets a plain
+    * theta body filter `ctx.rel` by joins instead ([[thetaMembership]];
+    * the returned column is then TRUE).
     *
     * An uncorrelated or equality-correlated body is a Catalyst
     * InSubquery over its one-column value set ([[catalystIn]]). A
@@ -3205,7 +3189,7 @@ final class Binder(
     * NULL when the lhs is NULL against a non-empty set or the unmatched
     * set holds a NULL. */
   private def bindInExpr(lhsExpr: Expr, sub: Query, negated: Boolean, ctx: Ctx,
-      predicate: Boolean = false): Column = {
+      predicate: Boolean = false, conjunct: Boolean = false): Column = {
     // correlated probe (same shape as bindScalarSubquery). Detect
     // correlation FIRST and reject unsupported shapes cleanly — falling
     // through to the uncorrelated bindQuery would surface a bare
@@ -3235,6 +3219,9 @@ final class Binder(
           if !equalityOrientable(correlated, innerRel, ctx.rel) =>
         // per-outer-row theta path: non-equality correlation
         val qb1 = stripNoopLimit(qb0)
+        if (conjunct &&
+            thetaMembership(qb1, innerRel, local, correlated, ctx, lhs, negated, bodyCtes))
+          return lit(true)
         // ≤1-row ungrouped-aggregate body: DISTINCT ON is a no-op and a
         // surviving LIMIT clause (post-strip: LIMIT 0 / OFFSET ≥ 1)
         // empties the membership set — IN FALSE for any lhs
@@ -3306,6 +3293,65 @@ final class Binder(
           inValues(qb, innerRel, local, correlated, ctx, bodyCtes, n), n, negated, predicate)
     }
     if (negated) !res else res
+  }
+
+  /** `lhs [NOT] IN (plain body)` as a top-level WHERE conjunct under
+    * theta correlation, where NULL counts as FALSE: the join form of
+    * [[membershipJoin]] (a hash semi / anti join on `lhs = e` with the
+    * correlation as residual) instead of the per-row three-valued
+    * aggregate. False, with nothing lowered, for any other body:
+    * aggregated, LIMIT, DISTINCT ON, a select item reading enclosing
+    * columns (the NOT IN NULL slice filters the body alone by it), or a
+    * subquery in the correlation. */
+  private def thetaMembership(qb: QueryBody, innerRel: Rel, local: Seq[Expr],
+      correlated: Seq[Expr], ctx: Ctx, lhs: Column, negated: Boolean,
+      bodyCtes: Map[String, DataFrame]): Boolean = {
+    val sel = qb.selectList match {
+      case Seq(SelectItem(e, _)) if !e.isInstanceOf[Wildcard] && collectAggs(e).isEmpty => e
+      case _ => return false
+    }
+    if (qb.groupBy.nonEmpty || qb.having.isDefined || qb.limit.isDefined ||
+        qb.distinct.exists(_.nonEmpty) || !resolvesWithin(sel, innerRel) ||
+        correlated.exists(containsSubquery)) return false
+    val what = "correlated IN subquery (theta path)"
+    val innerCtx = new Ctx(innerRel, None, bodyCtes)
+    applyLocal(local, innerCtx, what)
+    val (renamed, rScopes) = freshRenamed(innerCtx.rel.df, innerCtx.rel.scopes, what)
+    // correlation: inner names first, then outer (SQL scoping)
+    val corr = correlated.map(bindExpr(_, new Ctx(Rel(renamed, rScopes), Some(ctx.rel), bodyCtes)))
+      .reduce(_ && _)
+    val e = bindExpr(sel, new Ctx(Rel(renamed, rScopes), None, bodyCtes))
+    ctx.rel = Rel(membershipJoin(ctx.rel.df, renamed, Some(corr), lhs, e, negated),
+      ctx.rel.scopes)
+    true
+  }
+
+  /** The rows of `outer` that pass `lhs [NOT] IN {e(b) : b in body, corr}`
+    * in WHERE position (NULL counts as FALSE); for NOT IN `e` must be
+    * bound over `body` alone. IN is one semi join on `corr AND lhs = e` — hash-joinable
+    * on `lhs = e`, the correlation its residual. NOT IN prunes a row
+    * whose membership is TRUE or UNKNOWN, DECOMPOSED so the common case
+    * stays hash-joinable (a single `lhs = e OR lhs IS NULL OR e IS NULL`
+    * condition forces a nested-loop plan — ~5× on the qe101/qe110
+    * shapes, and a scale-killer on a real corpus):
+    *   1. prune TRUE memberships — equality anti join, correlation as
+    *      residual;
+    *   2. a NULL lhs against a NON-EMPTY set is UNKNOWN — the lhs-NULL
+    *      slice anti joins on the correlation alone (degenerate-empty
+    *      for non-null keys);
+    *   3. a NULL value in the set makes membership UNKNOWN for every
+    *      remaining lhs — anti join against the body's e-IS-NULL slice
+    *      (small by the same argument). */
+  private def membershipJoin(outer: DataFrame, body: DataFrame, corr: Option[Column],
+      lhs: Column, e: Column, negated: Boolean): DataFrame = {
+    val eq = corr.map(_ && lhs === e).getOrElse(lhs === e)
+    if (!negated) outer.join(body, eq, "left_semi")
+    else {
+      val afterEq = outer.join(body, eq, "left_anti")
+      val c = corr.getOrElse(lit(true))
+      afterEq.filter(lhs.isNull).join(body, c, "left_anti").unionByName(
+        afterEq.filter(lhs.isNotNull).join(body.filter(e.isNull), c, "left_anti"))
+    }
   }
 
   /** `lhs [NOT] IN (set)` through Catalyst's InSubquery, `set` being a

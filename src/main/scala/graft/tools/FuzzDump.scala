@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.Sessions
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 
 /** Differential-fuzz runner: executes `tools/fuzzgen.py` queries
   * through the ENGINE text path on deterministic fixture tables and
@@ -61,6 +62,9 @@ object FuzzDump {
     val spark = Sessions.build("graft-fuzz")
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
+    // the plan profile is the plan of the parquet write that ran
+    val ran = new RanPlans(spark, {
+      case w: InsertIntoHadoopFsRelationCommand => w.outputPath.getName })
     val eng = graft.queries.Engines.get(spark, sfDir)
     engineDdl.foreach(eng.execute(_))
     val lines = new String(Files.readAllBytes(Paths.get(qfile)), "UTF-8")
@@ -91,8 +95,8 @@ object FuzzDump {
       try {
         val df = eng.execute(sql)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        val p = ran.await(name)
         ok += name -> (oraclePrefix + oracleSql)
-        val p = df.queryExecution.executedPlan.toString
         if (sys.env.contains("GRAFT_FUZZ_PLANPRINT")) println(s"== $name ==\n$p")
         def c(s: String) = p.sliding(s.length).count(_ == s)
         val ms = markerVocab.filter(p.contains)
@@ -100,7 +104,8 @@ object FuzzDump {
         prof += name -> (s"""{"class":"$cls","markers":[$ms],""" +
           s""""bnlj":${c("BroadcastNestedLoopJoin")},""" +
           s""""smj":${c("SortMergeJoin")},"bhj":${c("BroadcastHashJoin")},""" +
-          s""""shj":${c("ShuffledHashJoin")},"cart":${c("CartesianProduct")}}""")
+          s""""shj":${c("ShuffledHashJoin")},"cart":${c("CartesianProduct")},""" +
+          s""""nonfinal":${c("isFinalPlan=false")}}""")
       } catch {
         case e: Throwable =>
           skipped += 1

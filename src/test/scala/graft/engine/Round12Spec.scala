@@ -30,7 +30,7 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     engine = Engine.forTestdata(spark, dir)
-    Seq("r12_o", "r12_m", "r12_m2", "r12_t").foreach(t =>
+    Seq("r12_o", "r12_m", "r12_m2", "r12_t", "r12_n").foreach(t =>
       sql(s"DROP TABLE IF EXISTS $t"))
     sql("CREATE TABLE r12_o (ok Int64)")
     sql("INSERT INTO r12_o VALUES (1), (2), (3), (4)")
@@ -44,6 +44,9 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
            (2, 25, 500, 1), (2, 50, 600, 2),
            (3, null, 700, 1), (3, 60, 800, 2),
            (4, 70, null, 1)""")
+    sql("CREATE TABLE r12_n (ok Int64, w Int64, u Int64)")
+    sql("""INSERT INTO r12_n VALUES (1, 150, 150), (2, null, null),
+           (3, 50, 300), (4, null, null), (9, 100, 100), (10, null, null)""")
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -225,6 +228,52 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
         ORDER BY v LIMIT 2 OFFSET 1)
       ORDER BY ok"""
     assert(oks(qn("")) == oks(qn(" AND q < ok * 12 + 900000000000000")))
+  }
+
+  // ---- NULL domain values, same-table levels, theta membership --------
+
+  test("nested NULL grandparent values, same-table levels, theta IN conjuncts") {
+    // (name, query, expected rows — DuckDB on the same fixture)
+    val cases = Seq(
+      // a NULL grandparent value still reaches the nested level: `q >
+      // NULL` empties the nested set, so rows 2 and 4 survive
+      ("NULL grandparent under NOT EXISTS", """SELECT ok FROM r12_n WHERE EXISTS (
+          SELECT 1 FROM r12_m WHERE g = ok AND NOT EXISTS (
+            SELECT 1 FROM r12_t WHERE oc = g AND q > w)) ORDER BY ok""",
+        Seq(1L, 2L, 4L)),
+      ("NULL grandparent under NOT IN", """SELECT ok FROM r12_n WHERE EXISTS (
+          SELECT 1 FROM r12_m WHERE g = ok AND lhs + 700 NOT IN (
+            SELECT v FROM r12_t WHERE oc = g AND q > w)) ORDER BY ok""",
+        Seq(1L, 2L, 4L)),
+      // middle and grandparent read the same table: the unqualified
+      // `lhs` is the middle's (the outer's would also keep g = 1)
+      ("same-table levels", """SELECT g FROM r12_m WHERE EXISTS (
+          SELECT 1 FROM r12_m AS mm WHERE mm.g = r12_m.g + 1 AND EXISTS (
+            SELECT 1 FROM r12_t WHERE v = lhs AND oc <= r12_m.g)) ORDER BY g""",
+        Seq(2L, 3L)),
+      // depth-1 theta membership conjuncts: NULL lhs (rows 2, 4, 10), a
+      // NULL value in the set (v of oc 4 while ok * 10 < 70) and an
+      // empty set (rows 9, 10)
+      ("theta NOT IN", """SELECT ok FROM r12_n
+          WHERE u NOT IN (SELECT v FROM r12_t WHERE q > ok * 10) ORDER BY ok""",
+        Seq(9L, 10L)),
+      ("theta NOT IN, no NULL value", """SELECT ok FROM r12_n
+          WHERE u NOT IN (SELECT v FROM r12_t WHERE q > ok * 10 AND v IS NOT NULL)
+          ORDER BY ok""",
+        Seq(1L, 9L, 10L)),
+      ("theta IN", """SELECT ok FROM r12_n
+          WHERE u IN (SELECT v FROM r12_t WHERE q > ok * 10) ORDER BY ok""",
+        Seq(3L)))
+    cases.foreach { case (name, q, want) => assert(oks(q) == want, name) }
+    // the theta membership rows against hand-built joins: membership
+    // TRUE or UNKNOWN prunes a NOT IN row; a match keeps an IN row
+    def handBuilt(cond: String, neg: Boolean, extra: String = "") = oks(s"""
+      SELECT ok FROM r12_n WHERE ${if (neg) "NOT " else ""}EXISTS (
+        SELECT 1 FROM r12_t WHERE q > ok * 10$extra AND ($cond)) ORDER BY ok""")
+    assert(handBuilt("v = u OR v IS NULL OR u IS NULL", neg = true) == Seq(9L, 10L))
+    assert(handBuilt("v = u OR v IS NULL OR u IS NULL", neg = true,
+      " AND v IS NOT NULL") == Seq(1L, 9L, 10L))
+    assert(handBuilt("v = u", neg = false) == Seq(3L))
   }
 
   // ---- multi-inequality DISTINCT ON deferral --------------------------

@@ -311,6 +311,7 @@ def gen(rng):
         # grandparent machinery); the middle table carries duplicate g
         # values so multiplicity-blindness is exercised too
         mcorr = "g = ok" if rng.random() < 0.7 else "g < ok + 1"
+        cls["mcorr"] = "eq" if mcorr == "g = ok" else "theta"
         mneg = "not " if rng.random() < 0.3 else ""
         cls["mneg"] = int(bool(mneg))
         # round-12 axis: a NEGATED nested SIBLING at the middle level —

@@ -110,6 +110,14 @@ def expected(t):
             t.get("pos") in ("sel", "top", "or"):
         rules.append(("bnlj==0", "equality scalar via Dataset.scalar()"))
 
+    # an all-equality nested query (equality at the middle level and in
+    # the predicate, no negated sibling) plans hash joins only. Depth 3
+    # is out: its second middle level correlates by `m2.g <= m1.g`, a
+    # theta join whatever mcorr is
+    if t.get("pos") == "nest2" and t.get("mcorr") == "eq" and \
+            t.get("corr") == "eq" and t.get("negsib") != "1" and not extras:
+        rules.append(("bnlj==0", "all-equality nested"))
+
     # round-12 rails (derived from 900-query marker profiles, 3 seeds):
     # a negated nested SIBLING at depth 2 always routes the middle
     # lowering through one of the per-pair nested rails; at depth 3 the
@@ -137,6 +145,11 @@ def main(out_dir):
         # global invariant: the binder never plans a cartesian product
         if p["cart"] != 0:
             print(f"CART     {name}: CartesianProduct in plan ({p['class']})")
+            n_bad += 1
+        # the profile must come from the plan that ran (FuzzDump's write
+        # listener), never an unexecuted adaptive plan
+        if p.get("nonfinal", 0) != 0:
+            print(f"NONFINAL {name}: profile holds isFinalPlan=false ({p['class']})")
             n_bad += 1
         for rule, desc in expected(t):
             n_rule += 1
