@@ -274,7 +274,7 @@ object Round9Queries {
          order by c_custkey"""),
 
     // the THETA form: non-equality correlation routes the rid-frame
-    // grouped windows (thetaLimitIn's grouped branch)
+    // grouped windows (thetaIn over the grouped step thetaGroups)
     engineSql("qe175_in_theta_grouped_distinct_on_limit",
       """SELECT o_orderkey FROM orders
          WHERE o_orderkey < 300 AND

@@ -263,8 +263,38 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
         Seq(1L, 9L, 10L)),
       ("theta IN", """SELECT ok FROM r12_n
           WHERE u IN (SELECT v FROM r12_t WHERE q > ok * 10) ORDER BY ok""",
-        Seq(3L)))
-    cases.foreach { case (name, q, want) => assert(oks(q) == want, name) }
+        Seq(3L))) ++ {
+      // theta IN / NOT IN in expression position, where the three-valued
+      // result shows: u IN set is NULL for rows 1, 2, 4 (a NULL value
+      // in the set, a NULL lhs), TRUE for row 3, FALSE for the empty
+      // sets of rows 9 and 10
+      val set = "(SELECT v FROM r12_t WHERE q > ok * 10)"
+      val noNull = "(SELECT v FROM r12_t WHERE q > ok * 10 AND v IS NOT NULL)"
+      val grouped = "(SELECT max(v) FROM r12_t WHERE q > ok * 10 GROUP BY oc)"
+      val limited = "(SELECT v FROM r12_t WHERE q > ok * 10 ORDER BY q LIMIT 2)"
+      Seq(
+        ("theta IN under OR", s"u IN $set OR ok = 10", Seq(3L, 10L)),
+        ("theta NOT IN under OR", s"u NOT IN $set OR ok = 1", Seq(1L, 9L, 10L)),
+        ("theta IN under NOT", s"NOT (u IN $set OR ok = 1)", Seq(9L, 10L)),
+        ("theta NOT IN under NOT", s"NOT (u NOT IN $set OR ok = 9)", Seq(3L)),
+        ("theta IN IS NULL", s"(u IN $set) IS NULL", Seq(1L, 2L, 4L)),
+        ("theta NOT IN IS NULL", s"(u NOT IN $set) IS NULL", Seq(1L, 2L, 4L)),
+        ("theta IN IS NULL, no NULL value", s"(u IN $noNull) IS NULL", Seq(2L, 4L)),
+        ("theta NOT IN IS NULL, no NULL value", s"(u NOT IN $noNull) IS NULL",
+          Seq(2L, 4L)),
+        ("theta IN = false", s"(u IN $set) = false", Seq(9L, 10L)),
+        ("grouped theta IN IS NULL", s"(u IN $grouped) IS NULL", Seq(1L, 2L, 4L)),
+        ("grouped theta NOT IN under OR", s"u NOT IN $grouped OR ok = 1",
+          Seq(1L, 9L, 10L)),
+        ("LIMIT theta IN IS NULL", s"(u IN $limited) IS NULL", Seq(2L, 4L)),
+        ("LIMIT theta NOT IN under OR", s"u NOT IN $limited OR ok = 1",
+          Seq(1L, 9L, 10L))
+      ).map { case (name, cond, want) =>
+        (name, s"SELECT ok FROM r12_n WHERE $cond ORDER BY ok", want)
+      }
+    }
+    val wrong = cases.collect { case (name, q, want) if oks(q) != want => name }
+    assert(wrong.isEmpty, wrong)
     // the theta membership rows against hand-built joins: membership
     // TRUE or UNKNOWN prunes a NOT IN row; a match keeps an IN row
     def handBuilt(cond: String, neg: Boolean, extra: String = "") = oks(s"""
@@ -274,6 +304,18 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(handBuilt("v = u OR v IS NULL OR u IS NULL", neg = true,
       " AND v IS NOT NULL") == Seq(1L, 9L, 10L))
     assert(handBuilt("v = u", neg = false) == Seq(3L))
+  }
+
+  test("theta IN in expression position plans no presence-marker join") {
+    // the set is built on the shared inner pair frame of the theta IN
+    // lowering; the old left-outer presence-marker join (its `__tmk_`
+    // column) is gone, with no cartesian and no more nested-loop joins
+    val p = sql("""SELECT ok FROM r12_n
+        WHERE (u IN (SELECT v FROM r12_t WHERE q > ok * 10)) IS NULL""")
+      .queryExecution.executedPlan.toString
+    assert(!p.contains("__tmk_"), p)
+    assert(!p.contains("CartesianProduct"), p)
+    assert("BroadcastNestedLoopJoin".r.findAllIn(p).size <= 1, p)
   }
 
   // ---- multi-inequality DISTINCT ON deferral --------------------------

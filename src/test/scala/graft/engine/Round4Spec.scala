@@ -350,14 +350,17 @@ class Round4Spec extends AnyFunSuite with BeforeAndAfterAll
         !e2.getMessage.contains("SCALAR_SUBQUERY_TOO_MANY_ROWS"), body)
     }
     // an ungrouped groupArray over no rows is NULL, not Spark's empty
-    // array default for collect_list
+    // array default for collect_list — under equality and theta
+    // correlation alike
     val arrs = rows(
       """select k,
                 (select groupArray(v) from t_lzin where t_lzin.k = t_lzout.k) as hit,
-                (select groupArray(v) from t_lzin where t_lzin.k = t_lzout.k + 10) as miss
+                (select groupArray(v) from t_lzin where t_lzin.k = t_lzout.k + 10) as miss,
+                (select groupArray(v) from t_lzin where t_lzin.k > t_lzout.k + 10) as tmiss
          from t_lzout order by k""")
-    assert(arrs.map(r => (r.getInt(0), r.getSeq[Long](1).sorted, r.isNullAt(2))) ==
-      Seq((1, Seq(10L), true), (2, Seq(20L, 30L), true)), arrs)
+    assert(arrs.map(r => (r.getInt(0), r.getSeq[Long](1).sorted, r.isNullAt(2),
+      r.isNullAt(3))) ==
+      Seq((1, Seq(10L), true, true), (2, Seq(20L, 30L), true, true)), arrs)
     sql("drop table t_lzout"); sql("drop table t_lzin")
   }
 

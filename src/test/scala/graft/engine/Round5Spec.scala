@@ -132,9 +132,8 @@ class Round5Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("theta aggregates with literal args skip the left-join placeholder row") {
-    // count(1)/sum(1) reference no inner column, so the all-NULL
-    // placeholder row an unmatched outer key gets from the left join
-    // must be excluded by the presence-marker gate — SQL's empty set
+    // count(1)/sum(1) reference no inner column, so an unmatched
+    // outer key must not count a placeholder row — SQL's empty set
     // says count 0 / sum NULL, not 1
     val r = rows("""select c_custkey,
         (select count(1) from orders where o_custkey < c_custkey) as c1,
