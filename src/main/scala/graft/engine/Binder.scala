@@ -3493,8 +3493,10 @@ final class Binder(
     val rid2 = s"${rid}_b"
     val p = perRid.withColumnRenamed(rid, rid2)
     val joined = outer.join(p, col(rid) === col(rid2), how).drop(rid, rid2)
+    // the scope lists only columns the joined frame keeps: a later
+    // freshRenamed of this frame maps every scope column to a fresh name
     ctx.rel = Rel(joined,
-      if (how == "left") ctx.rel.scopes :+ hiddenScope(p, p.columns.toSeq)
+      if (how == "left") ctx.rel.scopes :+ hiddenScope(p, p.columns.toSeq.filterNot(_ == rid2))
       else ctx.rel.scopes)
     p
   }
@@ -3988,6 +3990,27 @@ final class Binder(
     (havingExpr.map(h => grouped.filter(bindExpr(h, gCtx))).getOrElse(grouped), gCtx)
   }
 
+  /** The presence-marker pair frame: the rid frame `outer` LEFT-joined
+    * to the renamed inner frame on the raw correlation, the inner side
+    * carrying a `true` marker; an outer row without matches keeps one
+    * placeholder row whose marker is NULL. Returns the frame and the
+    * marker column's name. The ungrouped-aggregate and plain unsliced
+    * IN theta bodies take this join instead of [[thetaInnerJoin]]: its
+    * bind-time outer count and band stats, its band pre-thin of a
+    * correlation that also carries an inner = outer equality and its
+    * inner repartition made them 1.6–4.1× slower at sf0.1 (qe90, qe114,
+    * qe163, and an IN under OR with such a correlation). */
+  private def markedPairs(outer: DataFrame, renamed: DataFrame, rScopes: Seq[Scope],
+      correlated: Seq[Expr], ctx: Ctx, what: String): (DataFrame, String) = {
+    val mk = fresh("tmk")
+    val marked = renamed.withColumn(mk, lit(true))
+    val corrCtx = new Ctx(Rel(marked, rScopes), Some(ctx.rel), ctx.ctes)
+    val joined = leftRelationOnly(what) {
+      outer.join(marked, correlated.map(bindExpr(_, corrCtx)).reduce(_ && _), "left_outer")
+    }
+    (joined, mk)
+  }
+
   /** Ungrouped-aggregate subquery body through the theta path: returns
     * (value column, optional HAVING column) evaluated once per outer
     * row over per-rid aggregates joined back by rid. An outer row
@@ -4020,25 +4043,15 @@ final class Binder(
     val perRid = (if (aggPairs.isEmpty) None
       else thetaBandedGroupedAgg(outer, rid, renamed, rScopes, correlated, ctx,
         Nil, aggPairs, innerCtx.ctes, what)).getOrElse {
-      // otherwise the pair frame is LEFT-joined on the raw correlation
-      // with a presence marker, and each per-rid output reads NULL when
-      // the marker matched nothing. Not the shared [[thetaInnerJoin]]:
-      // its bind-time outer count and band stats, its band pre-thin of
-      // a mixed equality + theta correlation and its inner repartition
-      // made qe90, qe114 and qe163 1.6–4.1× slower at sf0.1
-      val mk = fresh("tmk")
-      val marked = renamed.withColumn(mk, lit(true))
-      val joined = leftRelationOnly(what) {
-        val corrCtx = new Ctx(Rel(marked, rScopes), Some(ctx.rel), ctx.ctes)
-        outer.join(marked, correlated.map(bindExpr(_, corrCtx)).reduce(_ && _),
-          "left_outer")
-      }
+      // otherwise each per-rid output of the presence-marker pair frame
+      // reads NULL when the marker matched nothing
+      val (joined, mk) = markedPairs(outer, renamed, rScopes, correlated, ctx, what)
       val jCtx = new Ctx(Rel(joined, rScopes), None, innerCtx.ctes)
       val outs =
         if (aggPairs.isEmpty)
           Seq(vName -> first(bindExpr(valueExpr, jCtx)), cName -> count(lit(1)))
         else aggPairs.map { case (fc, n) => n -> bindAggCall(fc, jCtx) }
-      val cols = outs.map { case (n, c) => when(count(marked(mk)) > 0, c).as(n) }
+      val cols = outs.map { case (n, c) => when(count(col(mk)) > 0, c).as(n) }
       joined.groupBy(col(rid)).agg(cols.head, cols.tail: _*)
     }
     val p = joinBack(ctx, outer, rid, perRid)
@@ -4466,15 +4479,16 @@ final class Binder(
     *     body joined to the outer rows, else the grouped step
     *     ([[thetaGroups]], the lhs riding as `passThru`; ON keys, ORDER
     *     BY and the value bind post-aggregation), else the projected
-    *     [[thetaInnerJoin]] pair frame;
+    *     [[thetaInnerJoin]] pair frame of a sliced body, else the
+    *     [[markedPairs]] frame of a plain unsliced one (the tail counts
+    *     only its marked rows);
     *  3. DISTINCT ON: the first row per (rid ∪ ON keys) in the body's
     *     ORDER BY — DuckDB DISTINCT ON scoped to each outer row's set;
     *  4. LIMIT / OFFSET [WITH TIES]: the per-rid slice ([[slicePerKey]]);
     *  5. the three-valued tail: TRUE on a match; FALSE when the set is
-    *     empty (an outer row without surviving rows never joins back)
-    *     or (no match, no NULL in the set, lhs non-NULL); NULL when the
-    *     lhs is NULL against a non-empty set or the unmatched set holds
-    *     a NULL.
+    *     empty (no surviving or marked row for the outer row) or (no
+    *     match, no NULL in the set, lhs non-NULL); NULL when the lhs is
+    *     NULL against a non-empty set or the unmatched set holds a NULL.
     * An ungrouped aggregate body has ONE value per outer row instead —
     * `x IN (v)` is the three-valued `x = v` ([[thetaUngroupedAgg]]).
     * Plain DISTINCT is membership-blind; ORDER BY is required only with
@@ -4583,20 +4597,32 @@ final class Binder(
         }
       case _ => None
     }
-    val (rows, ordCols, vName) = prefixClosed.getOrElse {
-      val selectExpr = substituteAliases(selectExpr0, qb.selectList)
+    // a plain unsliced body rides the presence-marker pair frame, whose
+    // placeholder rows the tail must not count: `present` is its marker
+    val (rows, ordCols, vName, present) = prefixClosed.map {
+      case (r, o, v) => (r, o, v, Option.empty[String])
+    }.getOrElse {
+      // the select expression binds as written: its alias names the
+      // expression itself (`max(v) AS v`), so only the ON keys, ORDER BY
+      // and HAVING substitute it
       val onExprs = onKeys.map(substituteAliases(_, qb.selectList))
       val ordExprs =
         if (sliced) qb.orderBy.map(ok => substituteAliases(ok.expr, qb.selectList))
         else Nil
-      val (src, bCtx) =
-        if (isGrouped)
-          thetaGroups(qb, innerCtx, outerL, rid, correlated, ctx,
-            selectExpr +: (onExprs ++ ordExprs), what, passThru = Seq(lhsName))
-        else {
+      val (src, bCtx, marker) =
+        if (isGrouped) {
+          val (g, gCtx) = thetaGroups(qb, innerCtx, outerL, rid, correlated, ctx,
+            selectExpr0 +: (onExprs ++ ordExprs), what, passThru = Seq(lhsName))
+          (g, gCtx, Option.empty[String])
+        } else {
           val (renamed, rScopes) = freshRenamed(innerCtx.rel.df, innerCtx.rel.scopes, what)
-          val joined = thetaInnerJoin(outerL, renamed, rScopes, correlated, ctx, what)
-          (joined, new Ctx(Rel(joined, rScopes), None, bodyCtes))
+          val (joined, mk) =
+            if (sliced) (thetaInnerJoin(outerL, renamed, rScopes, correlated, ctx, what), None)
+            else {
+              val (j, m) = markedPairs(outerL, renamed, rScopes, correlated, ctx, what)
+              (j, Some(m))
+            }
+          (joined, new Ctx(Rel(joined, rScopes), None, bodyCtes), mk)
         }
       val vN = fresh("tiv")
       val onNames = onExprs.map(_ => fresh("tlon"))
@@ -4604,13 +4630,14 @@ final class Binder(
       val df = src.select(
         (Seq(col(rid), col(lhsName)) ++
           onExprs.zip(onNames).map { case (e, on) => bindExpr(e, bCtx).as(on) } ++
-          ordExprs.zip(ordNames).map { case (e, on) => bindExpr(e, bCtx).as(on) } :+
-          bindExpr(selectExpr, bCtx).as(vN)): _*)
+          ordExprs.zip(ordNames).map { case (e, on) => bindExpr(e, bCtx).as(on) } ++
+          marker.map(col) :+
+          bindExpr(selectExpr0, bCtx).as(vN)): _*)
       val ordCols = qb.orderBy.zip(ordNames).map { case (ok, on) =>
         if (ok.desc) col(on).desc else col(on).asc }
       (if (onKeys.isEmpty) df
        else slicePerKey(df, (rid +: onNames).map(col), ordCols, 1, 0, ties = false),
-        ordCols, vN)
+        ordCols, vN, marker)
     }
     val set = qb.limit.fold(rows) { lc =>
       slicePerKey(rows, Seq(col(rid)), ordCols, evalLimitInt(lc.limit, "LIMIT"),
@@ -4621,8 +4648,9 @@ final class Binder(
     val nullN = fresh("tinull")
     val p = joinBack(ctx, outer, rid, set.groupBy(col(rid)).agg(
       max(when(col(vName) === col(lhsName), lit(1))).as(matchN),
-      count(lit(1)).as(cntN),
-      (count(when(col(vName).isNull, 1)) > 0).as(nullN)))
+      present.fold(count(lit(1)))(n => count(col(n))).as(cntN),
+      (count(when(col(vName).isNull &&
+        present.fold(lit(true))(col(_).isNotNull), 1)) > 0).as(nullN)))
     when(p(matchN) === 1, lit(true))
       .when(coalesce(p(cntN), lit(0L)) === 0, lit(false))
       .when(lhs.isNull || p(nullN), lit(null).cast("boolean"))

@@ -76,11 +76,14 @@ object FuzzDump {
     // class by tools/plancheck.py — a silent gate flip on a NON-driver
     // shape is invisible to the result compare (correct-but-generic)
     val prof = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // `__tmk_` is the presence-marker pair join of a theta
+    // ungrouped-aggregate body (rid `__turid_`) or a plain unsliced theta
+    // IN body (rid `__trid_`)
     val markerVocab = Seq("__vtthr_", "__vtg_", "__tirid_", "__tlrid_",
       "__tlthr_", "__scce_", "__ssidx_", "__sstb_", "__tgrid_", "__tsrid_",
       "__terid_", "__tbb_", "__pcv_", "__pdbest_", "__mtsalt_", "__xtrid_",
       "__trid_", "__gfpre_", "__pfrid_", "__nerid_", "__aerid_", "__xnrid_",
-      "__plv_", "__gfrn_")
+      "__plv_", "__gfrn_", "__tmk_", "__turid_")
     var skipped = 0
     lines.foreach { l =>
       val parts = l.split('\t')

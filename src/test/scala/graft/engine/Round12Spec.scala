@@ -272,6 +272,16 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
       val noNull = "(SELECT v FROM r12_t WHERE q > ok * 10 AND v IS NOT NULL)"
       val grouped = "(SELECT max(v) FROM r12_t WHERE q > ok * 10 GROUP BY oc)"
       val limited = "(SELECT v FROM r12_t WHERE q > ok * 10 ORDER BY q LIMIT 2)"
+      val scalarIn = "(SELECT min(v) FROM r12_t WHERE q > ok * 10 " +
+        "AND v > (SELECT min(lhs) FROM r12_m WHERE g < oc))"
+      val inOrIn = "(SELECT min(v) FROM r12_t WHERE q > ok * 10 " +
+        "AND (v IN (SELECT lhs FROM r12_m WHERE g <= oc) OR v > 700))"
+      val notInIn = "(SELECT min(v) FROM r12_t WHERE q > ok * 10 " +
+        "AND NOT (v IN (SELECT lhs FROM r12_m WHERE g <= oc)))"
+      val inIn = "u IN (SELECT v FROM r12_t WHERE q > ok * 10 " +
+        "AND v >= (SELECT max(lhs) FROM r12_m WHERE g <= oc))"
+      val groupedIn = "u IN (SELECT min(v) FROM r12_t WHERE q > ok * 10 " +
+        "AND (v IN (SELECT lhs FROM r12_m WHERE g <= oc) OR v > 700) GROUP BY oc)"
       Seq(
         ("theta IN under OR", s"u IN $set OR ok = 10", Seq(3L, 10L)),
         ("theta NOT IN under OR", s"u NOT IN $set OR ok = 1", Seq(1L, 9L, 10L)),
@@ -288,13 +298,42 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
           Seq(1L, 9L, 10L)),
         ("LIMIT theta IN IS NULL", s"(u IN $limited) IS NULL", Seq(2L, 4L)),
         ("LIMIT theta NOT IN under OR", s"u NOT IN $limited OR ok = 1",
-          Seq(1L, 9L, 10L))
+          Seq(1L, 9L, 10L)),
+        // the select alias shadows its aggregated column: the value is
+        // max(v), never max(max(v)). The LIMIT input keeps NULL out of
+        // its ORDER BY key, whose ASC placement differs from DuckDB's
+        ("grouped theta IN, self-named alias",
+          s"u IN (SELECT max(v) AS v FROM r12_t WHERE q > ok * 10 GROUP BY oc)", Seq(3L)),
+        ("grouped theta IN IS NULL, self-named alias",
+          s"(u IN (SELECT max(v) AS v FROM r12_t WHERE q > ok * 10 GROUP BY oc)) IS NULL",
+          Seq(1L, 2L, 4L)),
+        ("LIMIT grouped theta IN, self-named alias", s"u IN (SELECT max(v) AS v " +
+          "FROM r12_t WHERE q > ok * 10 AND v IS NOT NULL GROUP BY oc ORDER BY v LIMIT 1)",
+          Seq(3L)),
+        // theta subqueries as local conjuncts of a theta-correlated body:
+        // each joins its per-row result back onto the body's frame before
+        // the enclosing lowering re-projects that frame
+        ("theta scalar inside a theta scalar", s"$scalarIn = 500", Seq(1L, 2L)),
+        ("theta scalar inside a theta scalar, empty", s"$scalarIn IS NULL", Seq(9L, 10L)),
+        ("theta IN under OR inside a theta scalar", s"$inOrIn = 100", Seq(1L, 2L, 3L)),
+        ("theta IN under NOT inside a theta scalar", s"$notInIn = 300",
+          Seq(2L, 3L, 4L)),
+        ("theta scalar inside a theta EXISTS", "EXISTS (SELECT 1 FROM r12_t " +
+          "WHERE q > ok * 30 AND v > (SELECT min(lhs) FROM r12_m WHERE g < oc))",
+          Seq(1L)),
+        ("theta scalar inside a theta IN IS NULL", s"($inIn) IS NULL", Seq(2L, 4L)),
+        ("theta scalar inside a theta IN", inIn, Seq(3L)),
+        ("theta IN inside a grouped theta IN", s"NOT ($groupedIn)",
+          Seq(1L, 3L, 9L, 10L))
       ).map { case (name, cond, want) =>
         (name, s"SELECT ok FROM r12_n WHERE $cond ORDER BY ok", want)
       }
     }
-    val wrong = cases.collect { case (name, q, want) if oks(q) != want => name }
-    assert(wrong.isEmpty, wrong)
+    val wrong = cases.flatMap { case (name, q, want) =>
+      scala.util.Try(oks(q)).fold(e => Some(s"$name: $e"),
+        got => Option.when(got != want)(s"$name: $got"))
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
     // the theta membership rows against hand-built joins: membership
     // TRUE or UNKNOWN prunes a NOT IN row; a match keeps an IN row
     def handBuilt(cond: String, neg: Boolean, extra: String = "") = oks(s"""
@@ -306,14 +345,19 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(handBuilt("v = u", neg = false) == Seq(3L))
   }
 
-  test("theta IN in expression position plans no presence-marker join") {
-    // the set is built on the shared inner pair frame of the theta IN
-    // lowering; the old left-outer presence-marker join (its `__tmk_`
-    // column) is gone, with no cartesian and no more nested-loop joins
-    val p = sql("""SELECT ok FROM r12_n
+  test("theta IN in expression position keeps the presence-marker pair join") {
+    // a plain unsliced body builds its set on the left-outer
+    // presence-marker join (its `__tmk_` column), not on the banded
+    // inner pair frame, with no cartesian and one nested-loop join. The
+    // plan is read after the query ran: AQE's final plan, printed ahead
+    // of the initial one
+    val df = sql("""SELECT ok FROM r12_n
         WHERE (u IN (SELECT v FROM r12_t WHERE q > ok * 10)) IS NULL""")
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("__tmk_"), p)
+    df.collect()
+    val ran = df.queryExecution.executedPlan.toString
+    assert(ran.contains("isFinalPlan=true"), ran)
+    val p = ran.split("== Initial Plan ==").head
+    assert(p.contains("__tmk_") && p.contains("LeftOuter"), p)
     assert(!p.contains("CartesianProduct"), p)
     assert("BroadcastNestedLoopJoin".r.findAllIn(p).size <= 1, p)
   }
