@@ -198,8 +198,7 @@ final class Binder(
           (n, ok.desc)
       }
     }
-    def sortCol(k: (String, Boolean)): Column =
-      if (k._2) col(k._1).desc else col(k._1).asc
+    def sortCol(k: (String, Boolean)): Column = orderKey(col(k._1), k._2)
     if (hiddenCols.nonEmpty && qb.distinct.contains(Nil))
       err("ORDER BY key must appear in the select list when DISTINCT is used")
 
@@ -274,8 +273,8 @@ final class Binder(
     * top o+n rows (TakeOrderedAndProject — distributed top-k, never a
     * single-partition window), broadcast the (o+n)-th key tuple, and keep
     * every row whose key tuple sorts at-or-before it (null-aware
-    * lexicographic compare that mirrors Spark's sort order: asc = nulls
-    * first, desc = nulls last). OFFSET then drops the first o rows of the
+    * lexicographic compare that mirrors [[orderKey]]: nulls last in
+    * either direction). OFFSET then drops the first o rows of the
     * re-sorted frame — the SQL-standard order (offset first, then fetch n
     * WITH TIES extending past the fetch boundary only). The final orderBy
     * is re-applied because Catalyst's EliminateSorts removes the sort
@@ -283,10 +282,10 @@ final class Binder(
   private def withTies(df: DataFrame, keys: Seq[(String, Boolean)], n: Int,
       off: Int = 0): DataFrame = {
     val thrName: Map[String, String] = keys.map { case (nm, _) => nm -> fresh("thr") }.toMap
-    def sortCol(nm: String, desc: Boolean, flip: Boolean): Column = {
-      val c = col(nm)
-      if (desc ^ flip) c.desc else c.asc
-    }
+    // each key's order, or (flip) its exact reverse: nulls first
+    def sortCol(nm: String, desc: Boolean, flip: Boolean): Column =
+      if (!flip) orderKey(col(nm), desc)
+      else if (desc) col(nm).asc_nulls_first else col(nm).desc_nulls_first
     val topn = df
       .select(keys.map { case (nm, _) => col(nm).as(thrName(nm)) }: _*)
       .orderBy(keys.map { case (nm, d) => sortCol(thrName(nm), d, flip = false) }: _*)
@@ -298,8 +297,7 @@ final class Binder(
       .limit(1)
     def strictlyBefore(nm: String, desc: Boolean): Column = {
       val a = col(nm); val b = col(thrName(nm))
-      if (desc) (b.isNull && a.isNotNull) || (a > b)
-      else (a.isNull && b.isNotNull) || (a < b)
+      (b.isNull && a.isNotNull) || (if (desc) a > b else a < b)
     }
     val atOrBefore = keys.foldRight(lit(true)) { case ((nm, d), tailCond) =>
       strictlyBefore(nm, d) || ((col(nm) <=> col(thrName(nm))) && tailCond)
@@ -309,6 +307,13 @@ final class Binder(
       .orderBy(keys.map { case (nm, d) => sortCol(nm, d, flip = false) }: _*)
     if (off > 0) kept.offset(off) else kept
   }
+
+  /** The sort key of one ORDER BY item. NULLs sort last in either
+    * direction, as in DuckDB and ClickHouse; Spark's own `asc` puts them
+    * first. Every sort built from a query's ORDER BY takes its keys from
+    * here. */
+  private def orderKey(c: Column, desc: Boolean): Column =
+    if (desc) c.desc else c.asc_nulls_last
 
   /** Per-bucket LIMIT/OFFSET [WITH TIES]: keep window rows (off, off+lim]
     * of each `partCols` bucket in `ordCols` order — the shared slice of
@@ -1512,7 +1517,7 @@ final class Binder(
         ceB.as(ceN) :+ bindExpr(selectExpr0, innerCtx).as(vN)): _*)
     catch { case _: GraftException => return None } // outer-referencing keys
     val ordCols = qb.orderBy.zip(ordNs).map { case (ok, n) =>
-      if (ok.desc) col(n).desc else col(n).asc }
+      orderKey(col(n), ok.desc) }
     val maxima = op == ">" || op == ">="
     val wPrev = Window.partitionBy(gNames.map(col): _*).orderBy(ordCols: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -2202,7 +2207,7 @@ final class Binder(
                     bindExpr(oe, gCtx).as(on) } :+
                   v.as(vN)): _*)
               val ordCols = inOrderBy.zip(ordNames).map { case (ok, on) =>
-                if (ok.desc) col(on).desc else col(on).asc }
+                orderKey(col(on), ok.desc) }
               if (inOnKeys.nonEmpty) {
                 val rn = fresh("ngrn")
                 df = df.withColumn(rn, row_number().over(
@@ -2339,7 +2344,7 @@ final class Binder(
           bindExpr(substituteAliases(ok.expr, nqb.selectList), jCtx).as(on) } :+
         bindExpr(selExpr, jCtx).as(vName)): _*)
     val ordCols = nqb.orderBy.zip(ordNames).map { case (ok, on) =>
-      if (ok.desc) col(on).desc else col(on).asc }
+      orderKey(col(on), ok.desc) }
     // DISTINCT ON: keep-first per (pair rid ∪ ON keys) in the body's
     // ORDER BY — DuckDB semantics scoped to each pair's result set —
     // then any LIMIT slices the kept rows (rid-sized buckets throughout)
@@ -2491,7 +2496,7 @@ final class Binder(
         .map(bindExpr(_, nestedCtx))
       val ordCols = nqb.orderBy.map { ok =>
         val c = bindExpr(substituteAliases(ok.expr, nqb.selectList), nestedCtx)
-        if (ok.desc) c.desc else c.asc
+        orderKey(c, ok.desc)
       }
       theta match {
         case None =>
@@ -3263,7 +3268,7 @@ final class Binder(
         ordExprs.zip(ordNames).map { case (e, on) => bindExpr(e, bCtx).as(on) } :+
         bindExpr(selectExpr, bCtx).as(n)): _*)
     val ordCols = qb.orderBy.zip(ordNames).map { case (ok, on) =>
-      if (ok.desc) col(on).desc else col(on).asc }
+      orderKey(col(on), ok.desc) }
     val rn = fresh("irn")
     val kept =
       if (onKeys.isEmpty) df
@@ -3428,19 +3433,24 @@ final class Binder(
           s"exist): $other")
     }
 
-  /** True when every correlated conjunct is an equality with one side
-    * fully inside the subquery and the other fully outside — the shape
-    * the per-key grouped decorrelation handles. Anything else (range /
-    * inequality correlation, mixed-side expressions) routes to the
-    * per-outer-row theta path. */
-  private def equalityOrientable(correlated: Seq[Expr], innerRel: Rel,
-      outerRel: Rel): Boolean =
-    correlated.forall {
+  /** True when the correlated conjunct `c` is an equality with one side
+    * fully inside the subquery and the other fully outside: a hash-join
+    * key between the two relations. */
+  private def isEqualityKey(c: Expr, innerRel: Rel, outerRel: Rel): Boolean =
+    c match {
       case Binary("=", a, b) =>
         (resolvesWithin(a, innerRel) && resolvesWithin(b, outerRel)) ||
           (resolvesWithin(b, innerRel) && resolvesWithin(a, outerRel))
       case _ => false
     }
+
+  /** True when every correlated conjunct is an equality key — the shape
+    * the per-key grouped decorrelation handles. Anything else (range /
+    * inequality correlation, mixed-side expressions) routes to the
+    * per-outer-row theta path. */
+  private def equalityOrientable(correlated: Seq[Expr], innerRel: Rel,
+      outerRel: Rel): Boolean =
+    correlated.forall(isEqualityKey(_, innerRel, outerRel))
 
   /** Re-project a subquery-side frame through fresh column names,
     * carrying the scopes across via rename maps — the self-join-safety
@@ -3722,20 +3732,31 @@ final class Binder(
 
   /** The inner theta-correlation join shared by the per-outer-row
     * lowerings (scalar top-1, grouped scalar / IN / EXISTS, LIMIT-IN):
-    * binds the correlated conjuncts with inner-first-then-outer
-    * scoping and joins the rid-tagged outer frame to the fresh-renamed
-    * inner side — band-bucket-pre-thinned via [[thetaBandStats]] when a
-    * monotone inequality conjunct allows it AND both sides are big
-    * enough for the pre-thin to pay (tiny outer / tiny inner bound the
-    * direct-join volume by themselves — VERDICT r8 #4), otherwise the
-    * direct theta join over a round-robin-repartitioned inner side (a
-    * single-split parquet input would serialize the join predicate and
-    * every downstream per-rid pass on one core). */
+    * binds the correlated conjuncts with inner-first-then-outer scoping
+    * and inner-joins the rid-tagged outer frame to the fresh-renamed
+    * inner side; an outer row without matches has no pair.
+    *
+    * Equality first: when any conjunct is an inner = outer equality
+    * ([[isEqualityKey]]), the join is a plain hash join on that key with
+    * the other conjuncts as its residual — no outer count, no band
+    * stats, no repartition, so no Spark job at bind time. Banding beside
+    * the hash key cost qe90, qe114 and qe163 1.6–4.1× at sf0.1.
+    *
+    * A correlation without an equality is band-bucket-pre-thinned via
+    * [[thetaBandStats]] when a monotone inequality conjunct allows it
+    * AND both sides are big enough for the pre-thin to pay (tiny outer /
+    * tiny inner bound the direct-join volume by themselves — VERDICT r8
+    * #4), otherwise it is the direct theta join over a hash-spread inner
+    * side (a single-split parquet input would serialize the join
+    * predicate and every downstream per-rid pass on one core). */
   private def thetaInnerJoin(outerDf: DataFrame, renamed: DataFrame,
       rScopes: Seq[Scope], correlated: Seq[Expr], ctx: Ctx,
       what: String): DataFrame = leftRelationOnly(what) {
-    val corrCtx = new Ctx(Rel(renamed, rScopes), Some(ctx.rel), ctx.ctes)
+    val innerRel = Rel(renamed, rScopes)
+    val corrCtx = new Ctx(innerRel, Some(ctx.rel), ctx.ctes)
     val cond = correlated.map(bindExpr(_, corrCtx)).reduce(_ && _)
+    if (correlated.exists(isEqualityKey(_, innerRel, ctx.rel)))
+      return outerDf.join(renamed, cond, "inner")
     // a tiny (literal-capped) outer bounds the direct-join candidate
     // volume by itself — the band plan's quantile action plus the
     // explode pass would cost more than it saves (VERDICT r8 #4)
@@ -3995,11 +4016,10 @@ final class Binder(
     * carrying a `true` marker; an outer row without matches keeps one
     * placeholder row whose marker is NULL. Returns the frame and the
     * marker column's name. The ungrouped-aggregate and plain unsliced
-    * IN theta bodies take this join instead of [[thetaInnerJoin]]: its
-    * bind-time outer count and band stats, its band pre-thin of a
-    * correlation that also carries an inner = outer equality and its
-    * inner repartition made them 1.6–4.1× slower at sf0.1 (qe90, qe114,
-    * qe163, and an IN under OR with such a correlation). */
+    * IN theta bodies take this join instead of [[thetaInnerJoin]]. For a
+    * pure-theta correlation that builder's direct join hash-spreads the
+    * whole inner frame, which keeps every inner column in the scan and
+    * adds a shuffle: qe91 ran 1.37× slower on it at sf0.1. */
   private def markedPairs(outer: DataFrame, renamed: DataFrame, rScopes: Seq[Scope],
       correlated: Seq[Expr], ctx: Ctx, what: String): (DataFrame, String) = {
     val mk = fresh("tmk")
@@ -4208,7 +4228,7 @@ final class Binder(
           if (op == ">" || op == ">=") max(col(bestN)) else min(col(bestN))
         viaKept(base.groupBy(col(vN)).agg(bestAgg.as(bestN)), "pdrid",
           cmpOp(op, col(bestN), bindExpr(oe, ctx)),
-          qb.orderBy.map(ok => if (ok.desc) col(vN).desc else col(vN).asc), vN)
+          qb.orderBy.map(ok => orderKey(col(vN), ok.desc)), vN)
       case Some((op, ce, oe)) if onKeys.nonEmpty =>
         val idx = qb.orderBy.indexWhere(_.expr == ce)
         if (idx < 0 || ((op == ">" || op == ">=") != qb.orderBy(idx).desc) ||
@@ -4225,7 +4245,7 @@ final class Binder(
                 bindExpr(ok.expr, innerCtx).as(on) } :+
               bindExpr(valueExpr, innerCtx).as(vN)): _*)
           val ordColsF = qb.orderBy.zip(ordNamesF).map { case (ok, on) =>
-            if (ok.desc) col(on).desc else col(on).asc }
+            orderKey(col(on), ok.desc) }
           val saltN = fresh("pcsalt")
           val phase1 = slicePerKey(base.withColumn(saltN,
               pmod(xxhash64((ordNamesF :+ vN).map(col): _*), lit(64))),
@@ -4254,7 +4274,7 @@ final class Binder(
           bindExpr(ok.expr, jCtx).as(on) } :+
         bindExpr(valueExpr, jCtx).as(vName)): _*)
     val ordCols = qb.orderBy.zip(ordNames).map { case (ok, on) =>
-      if (ok.desc) col(on).desc else col(on).asc }
+      orderKey(col(on), ok.desc) }
     // DISTINCT dedups the per-rid value set before the rank (the sort
     // keys equal the value, so (rid, ords, value) dedup is exact);
     // DISTINCT ON keeps the FIRST row per (rid, ON-key) in the body's
@@ -4357,7 +4377,7 @@ final class Binder(
         Window.partitionBy(gNames.map(col): _*).orderBy(ceOrd)))
       .filter(col(lvlN) >= minLvl)
       .select(col(lvlN), col(ceN), tbB.as(tbN), vB.as(vN))
-    val tbOrd = if (tbDesc) col(tbN).desc else col(tbN).asc
+    val tbOrd = orderKey(col(tbN), tbDesc)
     val wL = Window.partitionBy(col(lvlN)).orderBy(ceOrd, tbOrd)
     val prevBest = (if (tbDesc) max(col(tbN)) else min(col(tbN)))
       .over(wL.rowsBetween(Window.unboundedPreceding, -1))
@@ -4452,7 +4472,7 @@ final class Binder(
             ordExprs.zip(ordNames).map { case (oe, on) =>
               bindExpr(oe, gCtx).as(on) }): _*)
         val ordCols = qb.orderBy.zip(ordNames).map { case (ok, on) =>
-          if (ok.desc) col(on).desc else col(on).asc }
+          orderKey(col(on), ok.desc) }
         val base =
           if (onKeys.isEmpty) base0
           else slicePerKey(base0, (rid +: onNames).map(col), ordCols, 1, 0, ties = false)
@@ -4587,7 +4607,7 @@ final class Binder(
                 bindExpr(ok.expr, innerCtx).as(on) } :+
                 bindExpr(selectExpr0, innerCtx).as(vN)): _*)
             val ordColsF = qb.orderBy.zip(ordNamesF).map { case (ok, on) =>
-              if (ok.desc) col(on).desc else col(on).asc }
+              orderKey(col(on), ok.desc) }
             val kept = base.orderBy(ordColsF: _*).limit(kN.toInt)
               .persist(StorageLevel.MEMORY_AND_DISK)
             persistedFrames += kept
@@ -4634,7 +4654,7 @@ final class Binder(
           marker.map(col) :+
           bindExpr(selectExpr0, bCtx).as(vN)): _*)
       val ordCols = qb.orderBy.zip(ordNames).map { case (ok, on) =>
-        if (ok.desc) col(on).desc else col(on).asc }
+        orderKey(col(on), ok.desc) }
       (if (onKeys.isEmpty) df
        else slicePerKey(df, (rid +: onNames).map(col), ordCols, 1, 0, ties = false),
         ordCols, vN, marker)

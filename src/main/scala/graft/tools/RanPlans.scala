@@ -29,3 +29,22 @@ final class RanPlans(spark: SparkSession, key: PartialFunction[LogicalPlan, Stri
       .getOrElse(throw new IllegalStateException(s"no finished write event for $k"))
   }
 }
+
+object RanPlans {
+
+  /** `plan` without the `== Initial Plan ==` subtrees that a finished
+    * adaptive plan prints after its final plan (one per adaptive plan,
+    * subquery plans included): only the operators that ran. */
+  def finalOnly(plan: String): String = {
+    // the lines of a `== Initial Plan ==` subtree start their text at
+    // the marker's column or right of it
+    def column(line: String): Int = line.indexWhere(c => !" :+-".contains(c))
+    var skipFrom = Int.MaxValue
+    plan.linesIterator.filter { line =>
+      val c = column(line)
+      if (c < skipFrom) skipFrom = Int.MaxValue
+      if (skipFrom == Int.MaxValue && line.contains("== Initial Plan ==")) skipFrom = c
+      skipFrom == Int.MaxValue
+    }.mkString("\n")
+  }
+}

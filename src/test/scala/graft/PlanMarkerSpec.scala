@@ -13,7 +13,10 @@ import org.apache.spark.sql.SparkSession
   * Each entry here asserts a DISTINGUISHING physical-plan marker — the
   * fast path's fresh-column prefix (unique per lowering) plus join
   * structure — at sf0.01, the smallest scale where every size gate
-  * engages the same plan as the bench scale.
+  * engages the same plan as the bench scale. Each entry runs into a
+  * noop sink and the pins read the plan that ran ([[tools.RanPlans]]:
+  * AQE's final plan, its initial plan left out), so a runtime join
+  * switch shows.
   *
   * Marker vocabulary (Binder fresh() prefixes):
   *   __vtthr_  value-threshold table (grouped theta IN collapse)
@@ -26,10 +29,14 @@ import org.apache.spark.sql.SparkSession
   *   __tirid_  generic grouped-IN rid frame
   *   __tgrid_  generic grouped-agg rid frame
   *   __terid_  generic EXISTS-survivors rid frame
+  *   __tbando_ band pre-thin of the theta pair frame (outer band id)
+  *   __tmk_    presence-marker pair join (ungrouped-aggregate and plain
+  *             unsliced IN theta bodies)
   */
 class PlanMarkerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private var ran: tools.RanPlans = _
   private val dir = "/root/testdata/sf0.01"
 
   override def beforeAll(): Unit = {
@@ -41,13 +48,15 @@ class PlanMarkerSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    ran = new tools.RanPlans(spark, {
+      case _: org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand => "noop" })
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def plan(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
+    SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
+    val p = tools.RanPlans.finalOnly(ran.await("noop"))
     queries.Engines.releaseAll()
     p
   }
@@ -172,6 +181,15 @@ class PlanMarkerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("__terid_"))
     assert(count(p, "BroadcastNestedLoopJoin") == 1)
     assert(count(p, "CartesianProduct") == 0)
+  }
+
+  // equality + theta correlations (qe90: ungrouped aggregate, qe114:
+  // bare lookup, qe163: a scalar in a join's CTE) join on the equality as
+  // a hash key with the theta conjunct as residual: no band pre-thin, no
+  // nested-loop join
+  Seq("qe90_corr_scalar_mixed", "qe114_bare_scalar_theta",
+      "qe163_right_on_scalar_both_sides").foreach { n =>
+    check(n, Nil, Seq("__tbando_"), noBnlj = true)
   }
 
   // round-12 pipeline additions: every join is an equijoin by design —

@@ -239,13 +239,15 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     sql("insert into r10p_o values (1, 4), (2, 7), (3, 9), (4, 12), (5, 8)")
     // kept per g (order c desc, v asc; NULL-c rows can never match):
     //   g1→(c10,v90) g2→(c5,v200) g3→none gNULL→(c8,v400) g4→(c9,vNULL)
-    // groups ranked by g asc = NULLS FIRST; OFFSET 1 → second survivor
+    // groups ranked by g asc = NULLS LAST, as in DuckDB; OFFSET 1 →
+    // second survivor (t=4: g1, g2, g4, gNULL → 200; t=7: g1, g4, gNULL
+    // → NULL from g4)
     val fast = rows(
       """SELECT ok, (SELECT DISTINCT ON (g) v FROM r10p_t
                      WHERE c > t ORDER BY g, c DESC, v LIMIT 1 OFFSET 1) AS r
          FROM r10p_o ORDER BY ok""")
       .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getLong(1)))
-    assert(fast == Seq((1L, 90L), (2L, 90L), (3L, null), (4L, null), (5L, null)))
+    assert(fast == Seq((1L, 200L), (2L, null), (3L, null), (4L, null), (5L, null)))
     // the SAME query with a vacuous second correlated conjunct takes the
     // generic pair-frame route (fast path requires a single conjunct) —
     // the two lowerings must agree row for row
@@ -288,9 +290,9 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
          FROM r10p_o WHERE ok = 1 ORDER BY ok""")
       .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getLong(1)))
     // t=4: per-group kept over FILTERED rows (c>4): g1→90 (ties → v asc
-    // 90), g2→200, gNULL→400, g4→NULL; rank by g NULLS FIRST:
-    // 400, 90, 200, NULL → OFFSET 1 → 90
-    assert(got == Seq((1L, 90L)))
+    // 90), g2→200, gNULL→400, g4→NULL; rank by g NULLS LAST, as in
+    // DuckDB: 90, 200, NULL, 400 → OFFSET 1 → 200
+    assert(got == Seq((1L, 200L)))
   }
 
   test("prefix-closed theta LIMIT IN ≡ generic, 3-valued corners") {

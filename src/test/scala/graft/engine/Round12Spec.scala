@@ -300,8 +300,9 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
         ("LIMIT theta NOT IN under OR", s"u NOT IN $limited OR ok = 1",
           Seq(1L, 9L, 10L)),
         // the select alias shadows its aggregated column: the value is
-        // max(v), never max(max(v)). The LIMIT input keeps NULL out of
-        // its ORDER BY key, whose ASC placement differs from DuckDB's
+        // max(v), never max(max(v)). The second LIMIT input keeps oc 4's
+        // NULL max in its ORDER BY key: ASC puts it last, as in DuckDB,
+        // so row 3 keeps its group
         ("grouped theta IN, self-named alias",
           s"u IN (SELECT max(v) AS v FROM r12_t WHERE q > ok * 10 GROUP BY oc)", Seq(3L)),
         ("grouped theta IN IS NULL, self-named alias",
@@ -309,6 +310,9 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
           Seq(1L, 2L, 4L)),
         ("LIMIT grouped theta IN, self-named alias", s"u IN (SELECT max(v) AS v " +
           "FROM r12_t WHERE q > ok * 10 AND v IS NOT NULL GROUP BY oc ORDER BY v LIMIT 1)",
+          Seq(3L)),
+        ("LIMIT grouped theta IN, self-named alias, NULL sort key", s"u IN (SELECT " +
+          "max(v) AS v FROM r12_t WHERE q > ok * 10 GROUP BY oc ORDER BY v LIMIT 1)",
           Seq(3L)),
         // theta subqueries as local conjuncts of a theta-correlated body:
         // each joins its per-row result back onto the body's frame before
@@ -360,6 +364,34 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("__tmk_") && p.contains("LeftOuter"), p)
     assert(!p.contains("CartesianProduct"), p)
     assert("BroadcastNestedLoopJoin".r.findAllIn(p).size <= 1, p)
+  }
+
+  test("ORDER BY puts NULLs last in either direction, as DuckDB does") {
+    // (name, query, expected rows — DuckDB on the same fixture; r12_n.w
+    // is NULL for rows 2, 4 and 10, r12_t has a NULL q for oc 3 and a
+    // NULL v for oc 4)
+    val cases = Seq(
+      ("ASC LIMIT", "SELECT ok FROM r12_n ORDER BY w LIMIT 3", Seq(3L, 9L, 1L)),
+      ("DESC LIMIT", "SELECT ok FROM r12_n ORDER BY w DESC LIMIT 3", Seq(1L, 9L, 3L)),
+      ("ASC LIMIT OFFSET", "SELECT ok FROM r12_n ORDER BY w, ok LIMIT 2 OFFSET 2",
+        Seq(1L, 2L)),
+      // the kept set of a WITH TIES slice (DuckDB: rank() <= k)
+      ("ASC LIMIT WITH TIES", "SELECT ok FROM (SELECT ok FROM r12_n ORDER BY w " +
+        "LIMIT 3 WITH TIES) AS s ORDER BY ok", Seq(1L, 3L, 9L)),
+      ("ASC LIMIT WITH TIES into the NULLs", "SELECT ok FROM (SELECT ok FROM r12_n " +
+        "ORDER BY w LIMIT 4 WITH TIES) AS s ORDER BY ok", Seq(1L, 2L, 3L, 4L, 9L, 10L)),
+      // equality-correlated ORDER BY … LIMIT 1 scalars over NULL sort keys
+      ("equality top-1 scalar, NULL ASC key", "SELECT ok FROM r12_n WHERE " +
+        "(SELECT v FROM r12_t WHERE oc = ok ORDER BY q LIMIT 1) = 800 ORDER BY ok",
+        Seq(3L)),
+      ("equality top-1 scalar, NULL DESC key", "SELECT ok FROM r12_n WHERE " +
+        "(SELECT q FROM r12_t WHERE oc = ok ORDER BY v DESC LIMIT 1) = 70 ORDER BY ok",
+        Seq(4L)))
+    val wrong = cases.flatMap { case (name, q, want) =>
+      scala.util.Try(oks(q)).fold(e => Some(s"$name: $e"),
+        got => Option.when(got != want)(s"$name: $got"))
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
   }
 
   // ---- multi-inequality DISTINCT ON deferral --------------------------

@@ -16,9 +16,9 @@ and is RESULT-DETERMINISTIC and ENGINE-PORTABLE by construction:
     top-1) order by a TOTAL key ending in the unique `rid` (row-level)
     or the full group-key list (grouped);
   - nullable columns (y, z) never decide a cross-row slice unless the
-    body filters them non-null first — Spark sorts NULLS FIRST asc,
-    DuckDB NULLS LAST, so a NULL-ordered slice would diverge while both
-    engines are "right";
+    body filters them non-null first, so no slice depends on where NULLs
+    sort (the engine and DuckDB put them last; Spark's own ASC default
+    puts them first);
   - WITH TIES uses a non-unique sort prefix alone (the kept SET is
     closed under ties, hence deterministic) and never combines with
     DISTINCT ON (the kept VALUE per ON key would be tie-arbitrary).

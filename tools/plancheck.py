@@ -110,6 +110,15 @@ def expected(t):
             t.get("pos") in ("sel", "top", "or"):
         rules.append(("bnlj==0", "equality scalar via Dataset.scalar()"))
 
+    # an equality + theta correlation at one level joins on the equality
+    # as a hash key with the theta conjunct as residual in every theta
+    # lowering: Binder.thetaInnerJoin takes the equality first, and the
+    # presence-marker join is a left hash join on it. A set-op body is
+    # uncorrelated whatever its corr tag says
+    if t.get("corr") == "mixed" and not extras and \
+            t.get("shape") != "setop" and t.get("pos") in ("sel", "top", "or"):
+        rules.append(("bnlj==0", "equality + theta hash join"))
+
     # an all-equality nested query (equality at the middle level and in
     # the predicate, no negated sibling) plans hash joins only. Depth 3
     # is out: its second middle level correlates by `m2.g <= m1.g`, a
