@@ -636,44 +636,45 @@ object Dedup {
     * deltas read only the batch and the index. */
   def appendToCorpusShingleIndex(index: CorpusShingleIndex, batch: DataFrame,
       idCol: String, textCol: String): CorpusShingleIndex =
-    // append-only: the batch working set is dead once the deltas are
-    // materialized — release it HERE rather than letting it accumulate
-    // across a continuous-ingestion loop of appends (a loop of N
-    // appends would otherwise pin 2N dead batch caches until the next
-    // global releaseAll, evicting the live index frames)
-    appendFrom(index, batchInput(index, batch, idCol, textCol),
-      releaseWorkingSet = true)
+    appendWithDeltas(index, batchInput(index, batch, idCol, textCol),
+      (_, _) => Nil)._1
 
   /** Classify AND ingest in one call — the per-batch step of the
     * continuous-ingestion loop. The batch's shingle/rank/fingerprint
     * working set is computed ONCE and shared by the verdict pipeline
     * and the index deltas (separate classify-then-append calls re-ran
     * it; at fixture scale that one batch pipeline is ~2 s of the qp103
-    * entry). Returns the lazy verdict frame plus the grown index; the
-    * append's eager materialization also fills the shared caches the
-    * verdict frame reads.
+    * entry). Returns the verdict frame, already MATERIALIZED, plus the
+    * grown index: the verdicts are persisted (MEMORY_AND_DISK, tracked
+    * by [[PipelineCaches]]) and filled by the same single action that
+    * fills the index deltas, so the caller's reads of them — the
+    * verdict list, a per-source count, the INSERT that stores the batch
+    * — scan one small cache instead of each re-running the exact semi
+    * join, the prefix candidate join, the array verify join and the
+    * final sort. The batch working set is released before this returns.
     *
     * The verdicts are judged against the index snapshot (build-time
     * corpus plus appended batches), not against the corpus table's
     * current files: writing the batch into that table — even by an
     * INSERT that reads this verdict frame — neither invalidates the
     * index caches (no index plan reads the table's path, so
-    * `recacheByPath` passes them by) nor changes a verdict. */
+    * `recacheByPath` passes them by) nor changes a verdict. A released
+    * verdict cache recomputes the same rows from the batch and the
+    * index pieces. A loaded index is the exception: overwriting its
+    * tables (`writeIndexTables`) clears every cache planned over them,
+    * this one included, so act on the verdicts before a rebuild. */
   def classifyAndAppend(index: CorpusShingleIndex, batch: DataFrame,
       idCol: String, textCol: String): (DataFrame, CorpusShingleIndex) = {
     val in = batchInput(index, batch, idCol, textCol)
-    // the returned verdict frame still READS the working set, so it
-    // stays cached here — the caller releases it after acting on the
-    // verdicts (`Engines.releaseAll()`, the standard post-action drain).
     // Round 16: the verdict pipeline reads the append's PERSISTED
     // prefix/arrays deltas instead of re-running the same window filter
     // and sort_array aggregate over the working set a second time —
     // the two legs are textually identical frames, so sharing the
     // materialized ones is a pure recompute removal (guide §1.2 "don't
     // compute things you throw away").
-    val (grown, prefixDelta, arrsDelta) =
-      appendWithDeltas(index, in, releaseWorkingSet = false)
-    (verdictsFrom(index, in, prefixDelta, arrsDelta), grown)
+    val (grown, filled) = appendWithDeltas(index, in,
+      (prefixDelta, arrsDelta) => Seq(verdictsFrom(index, in, prefixDelta, arrsDelta)))
+    (filled.head, grown)
   }
 
   /** PERSIST the index as bucketed catalog tables — the production
@@ -896,15 +897,13 @@ object Dedup {
       Seq(col("h")), index.maxPosting)
   }
 
-  private def appendFrom(index: CorpusShingleIndex, in: BatchIndexInput,
-      releaseWorkingSet: Boolean): CorpusShingleIndex =
-    appendWithDeltas(index, in, releaseWorkingSet)._1
-
-  /** [[appendFrom]] plus the materialized prefix/arrays delta frames,
-    * so [[classifyAndAppend]] can point the verdict pipeline at the
-    * SAME persisted frames instead of re-deriving them (round 16). */
+  /** Grow `index` by the batch's fps/prefix/arrays deltas. `fill` builds
+    * further frames from the (prefix, arrays) deltas — the verdicts of
+    * [[classifyAndAppend]] — which are persisted, tracked and filled by
+    * the SAME action as the deltas and returned in order. */
   private def appendWithDeltas(index: CorpusShingleIndex, in: BatchIndexInput,
-      releaseWorkingSet: Boolean): (CorpusShingleIndex, DataFrame, DataFrame) = {
+      fill: (DataFrame, DataFrame) => Seq[DataFrame])
+      : (CorpusShingleIndex, Seq[DataFrame]) = {
     def persistTracked(df: DataFrame): DataFrame =
       PipelineCaches.track(df.persist(StorageLevel.MEMORY_AND_DISK))
     val fpsDelta = persistTracked(in.fp.select(col("__fp")).distinct()
@@ -917,24 +916,33 @@ object Dedup {
     // exempted from the working-set release below — it lives on as an
     // index piece until index.release / the global drain
     val arrsDelta = in.sets
-    // one materialization action for all three deltas AND the cap
-    // audit (see the build — the tagged fifth-branch idiom)
+    // persisted AFTER the deltas, so their cached plans read them
+    val filled = fill(prefixDelta, arrsDelta).map(persistTracked)
+    // one materialization action for all three deltas, the filled
+    // frames AND the cap audit (see the build — the tagged
+    // fifth-branch idiom)
     val ceilT = ((col("__sz") * index.thresholdNum + index.thresholdDen - 1) /
       index.thresholdDen).cast("long")
     val droppedDelta = materializeAndCountDropped(
-      Seq(fpsDelta, prefixDelta, arrsDelta),
+      Seq(fpsDelta, prefixDelta, arrsDelta) ++ filled,
       overCapBuckets(
         in.ranked.filter(col("__rk") <= col("__sz") - ceilT + 1),
         Seq(col("h")), index.maxPosting))
-    // in.sets is NOT released: it is the arrays delta (an index piece)
-    if (releaseWorkingSet) { in.ranked.unpersist(); in.fp.unpersist() }
+    // the working set is dead once everything reading it is filled —
+    // release it HERE rather than letting it accumulate across a
+    // continuous-ingestion loop (N appends would otherwise pin 2N dead
+    // batch caches until the next global releaseAll, evicting the live
+    // index frames). A filled cache is kept as it is: Spark recompiles
+    // only dependents whose buffers are not loaded. in.sets is NOT
+    // released: it is the arrays delta (an index piece)
+    in.ranked.unpersist(); in.fp.unpersist()
     (index.copy(
       fps = index.fps.unionAll(fpsDelta),
       prefix = index.prefix.unionAll(prefixDelta),
       arrs = index.arrs.unionAll(arrsDelta),
       droppedPostings = index.droppedPostings + droppedDelta,
       cachedPieces = index.cachedPieces ++ Seq(fpsDelta, prefixDelta, arrsDelta)),
-      prefixDelta, arrsDelta)
+      filled)
   }
 
   /** Classify a batch of arriving documents against a prebuilt

@@ -101,14 +101,18 @@ object FuzzDump {
         val p = ran.await(name)
         ok += name -> (oraclePrefix + oracleSql)
         if (sys.env.contains("GRAFT_FUZZ_PLANPRINT")) println(s"== $name ==\n$p")
-        def c(s: String) = p.sliding(s.length).count(_ == s)
+        // join operators are counted over the operators that ran: the
+        // `== Initial Plan ==` subtrees repeat every join, including
+        // the ones AQE replaced at run time
+        val fin = RanPlans.finalOnly(p)
+        def c(in: String, s: String) = in.sliding(s.length).count(_ == s)
         val ms = markerVocab.filter(p.contains)
           .map("\"" + _ + "\"").mkString(",")
         prof += name -> (s"""{"class":"$cls","markers":[$ms],""" +
-          s""""bnlj":${c("BroadcastNestedLoopJoin")},""" +
-          s""""smj":${c("SortMergeJoin")},"bhj":${c("BroadcastHashJoin")},""" +
-          s""""shj":${c("ShuffledHashJoin")},"cart":${c("CartesianProduct")},""" +
-          s""""nonfinal":${c("isFinalPlan=false")}}""")
+          s""""bnlj":${c(fin, "BroadcastNestedLoopJoin")},""" +
+          s""""smj":${c(fin, "SortMergeJoin")},"bhj":${c(fin, "BroadcastHashJoin")},""" +
+          s""""shj":${c(fin, "ShuffledHashJoin")},"cart":${c(fin, "CartesianProduct")},""" +
+          s""""nonfinal":${c(p, "isFinalPlan=false")}}""")
       } catch {
         case e: Throwable =>
           skipped += 1

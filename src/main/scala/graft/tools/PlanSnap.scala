@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
 /** Runs named queries into a noop sink and writes the physical plan
   * that RAN ([[RanPlans]]: the final adaptive plan, subquery plans
   * included) to files, plus one line of join-operator counts per query
-  * in `<outDir>/joins_<suffix>.tsv` — the evidence trail for a plan
+  * (over the final plan only, [[RanPlans.finalOnly]]) in
+  * `<outDir>/joins_<suffix>.tsv` — the evidence trail for a plan
   * diff between two builds (plans/r16/<q>_before/_after).
   *
   * Usage: runMain graft.tools.PlanSnap <outDir> <suffix> <query names…>
@@ -33,7 +34,8 @@ object PlanSnap {
       // the next dump's plan isn't shaped by a predecessor's cache
       graft.queries.Engines.releaseAll(blocking = true)
       println(s"[plansnap] wrote $n ($suffix)")
-      (n +: joinOps.map(op => plan.sliding(op.length).count(_ == op).toString)).mkString("\t")
+      val fin = RanPlans.finalOnly(plan)
+      (n +: joinOps.map(op => fin.sliding(op.length).count(_ == op).toString)).mkString("\t")
     }
     Files.writeString(Paths.get(outDir, s"joins_$suffix.tsv"),
       (("query" +: joinOps).mkString("\t") +: summary).mkString("", "\n", "\n"))
